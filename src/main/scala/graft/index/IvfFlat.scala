@@ -57,14 +57,17 @@ final case class IvfFlatModel(
       .drop("__bucket")
   }
 
-  /** Incremental maintenance (reference InsertVectorEntry `:92-95`):
-    * assign new rows to existing centroids, append. Centroids stay put. */
-  def insert(rows: DataFrame): IvfFlatModel = {
-    val assigned = rows.withColumn("__bucket",
+  /** `rows` (id columns + vector column) in the bucket layout, each
+    * assigned to its nearest centroid — map-side, no shuffle. */
+  def assign(rows: DataFrame): DataFrame =
+    rows.withColumn("__bucket",
       NearestCentroid.column(col(vecCol), centroids, metric))
       .select(buckets.columns.map(col): _*)
-    copy(buckets = buckets.unionAll(assigned))
-  }
+
+  /** Incremental maintenance (reference InsertVectorEntry `:92-95`):
+    * assign new rows to existing centroids, append. Centroids stay put. */
+  def insert(rows: DataFrame): IvfFlatModel =
+    copy(buckets = buckets.unionAll(assign(rows)))
 
   /** Delete maintenance — the OTHER half of index lifecycle (the
     * reference leaves even insert maintenance as a TODO,

@@ -5,7 +5,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.DistanceMetric
 
-/** Vector-index catalog + KNN front door.
+/** Vector-index catalog and index selection.
   *
   * Mirrors the reference's `Catalog::CreateVectorIndex` metadata
   * (`src/include/catalog/catalog.h:293-350`: index name, table, column,
@@ -21,7 +21,6 @@ import org.apache.spark.sql.graft.DistanceMetric
 object VectorIndexes {
 
   sealed trait Model {
-    def scan(spark: SparkSession, query: Seq[Double], k: Int): DataFrame
     /** (__knn_id, __knn_vec) — id + stored vector of the top-k, for the
       * optimizer rule's semi-join (vector-valued when the id column
       * isn't available in the target plan). */
@@ -29,19 +28,15 @@ object VectorIndexes {
         : DataFrame
   }
   final case class IvfModel(m: IvfFlatModel, idCol: String) extends Model {
-    def scan(spark: SparkSession, query: Seq[Double], k: Int): DataFrame =
-      m.scan(query, k, tieBreak = Some(idCol))
     def scanIdsVecs(spark: SparkSession, query: Seq[Double], k: Int)
         : DataFrame = {
       import org.apache.spark.sql.functions.col
-      scan(spark, query, k).select(col(idCol).as("__knn_id"),
-        col(m.vecCol).cast("array<double>").as("__knn_vec"))
+      m.scan(query, k, tieBreak = Some(idCol))
+        .select(col(idCol).as("__knn_id"),
+          col(m.vecCol).cast("array<double>").as("__knn_vec"))
     }
   }
   final case class HnswModel(idx: HnswIndex, idCol: String) extends Model {
-    def scan(spark: SparkSession, query: Seq[Double], k: Int): DataFrame =
-      Hnsw.scanAsDf(spark, idx, query, k)
-        .withColumnRenamed("id", idCol)
     def scanIdsVecs(spark: SparkSession, query: Seq[Double], k: Int)
         : DataFrame = {
       import spark.implicits._
@@ -154,26 +149,16 @@ object VectorIndexes {
       meta
     }
 
-  /** Index selection per MatchVectorIndex (see object doc). */
-  def select(table: String, column: String,
-      metric: DistanceMetric.Value, method: String): Option[IndexMeta] =
-    pick(registry.values
-      .filter(m => m.table == table && m.column == column).toSeq,
-      metric, method)
-
-  /** Same selection keyed by the indexed table's canonicalized plan
-    * leaf — used by the optimizer rule, where only the plan is known. */
+  /** Index selection per MatchVectorIndex (see object doc), keyed by
+    * the indexed table's canonicalized plan leaf — the optimizer rule
+    * only knows the plan. */
   def selectByLeaf(
       leaf: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       column: String, metric: DistanceMetric.Value,
-      method: String): Option[IndexMeta] =
-    pick(registry.values
-      .filter(m => m.leaf.contains(leaf) && m.column == column).toSeq,
-      metric, method)
-
-  private def pick(candidatesUnsorted: Seq[IndexMeta],
-      metric: DistanceMetric.Value, method: String): Option[IndexMeta] = {
-    val candidates = candidatesUnsorted.sortBy(_.name)
+      method: String): Option[IndexMeta] = {
+    val candidates = registry.values
+      .filter(m => m.leaf.contains(leaf) && m.column == column)
+      .toSeq.sortBy(_.name)
     method match {
       case "none" => None
       case "ivfflat" | "hnsw" =>
@@ -191,28 +176,5 @@ object VectorIndexes {
     val cur = spark.experimental.extraOptimizations
     if (!cur.exists(_.isInstanceOf[org.apache.spark.sql.graft.VectorIndexScanRule]))
       spark.experimental.extraOptimizations = cur :+ rule
-  }
-
-  /** KNN over `df` (registered as `table`): index-served when selection
-    * finds one, else brute-force TopN. Output schema is UNIFORM across
-    * paths — all of df's columns plus `dist`, distance-ascending —
-    * so callers don't change shape when the session's
-    * vector_index_method (or index registry) changes. */
-  def knn(spark: SparkSession, table: String, df: DataFrame,
-      idCol: String, vecCol: String, query: Seq[Double], k: Int,
-      metric: DistanceMetric.Value = DistanceMetric.L2): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val method =
-      spark.conf.getOption("graft.vector_index_method").getOrElse("")
-    select(table, vecCol, metric, method) match {
-      case Some(meta) =>
-        val ids = meta.model.scan(spark, query, k)
-          .select(col(meta.idCol).as("__knn_join_id"), col("dist"))
-        df.join(ids, col(idCol) === col("__knn_join_id"))
-          .drop("__knn_join_id")
-          .orderBy(col("dist").asc, col(idCol).asc)
-      case None =>
-        Knn.bruteForce(df, vecCol, query, k, metric, Some(idCol))
-    }
   }
 }

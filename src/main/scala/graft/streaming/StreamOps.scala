@@ -63,8 +63,8 @@ object StreamOps {
       lit(true)))
 
   /** Streaming vector-index ingestion — the ingestion-time twin of
-    * `IvfFlatModel.insert`: assign each arriving vector to the FROZEN
-    * centroids map-side (codegen'd
+    * `IvfFlatModel.insert`: `IvfFlatModel.assign` puts each arriving
+    * vector in its bucket by the FROZEN centroids map-side (codegen'd
     * [[org.apache.spark.sql.graft.NearestCentroid]] — a stateless
     * narrow transform, so the plan is identical batch or streaming and
     * state stays zero at any throughput). Write the result with
@@ -75,10 +75,7 @@ object StreamOps {
     * pruning partitions across BOTH — new vectors become searchable at
     * the next index load with no rebuild and no shuffle anywhere. */
   def ivfIngest(rows: DataFrame, model: graft.index.IvfFlatModel): DataFrame =
-    rows.withColumn("__bucket",
-      org.apache.spark.sql.graft.NearestCentroid.column(
-        col(model.vecCol), model.centroids, model.metric))
-      .select(model.buckets.columns.map(col): _*)
+    model.assign(rows)
 
   /** Stream-static dimension enrichment: join the (unbounded) fact
     * stream against a bounded dimension table, broadcast per

@@ -149,9 +149,9 @@ class VectorIndexScanRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // Inject the OPTIMIZED subplan, not the analyzed one: this rule
       // runs after the optimizer's early batches, so an analyzed
       // fragment would smuggle in operators the physical planner
-      // refuses (e.g. a Deduplicate from the index-maintenance
-      // `.distinct()` that only ReplaceDeduplicateWithAggregate — a
-      // finish-analysis rule — can remove) and alias nodes. A nested
+      // refuses (e.g. a Deduplicate, which only
+      // ReplaceDeduplicateWithAggregate — a finish-analysis rule — can
+      // remove) and alias nodes. A nested
       // optimization pass is safe here: optimizer rules are idempotent,
       // output attribute ids are preserved (the Sort/Limit retained
       // above still resolve), and re-entry of THIS rule terminates —

@@ -404,14 +404,73 @@ class EngineSpec extends SparkSpecBase {
       "(ARRAY [2.0, 2.0], 2)")
     e.executeSql("CREATE INDEX t9i ON t9 USING hnsw (v1 vector_l2_ops) " +
       "WITH (m = 4, ef_construction = 8, ef_search = 8)")
+    e.executeSql("CREATE INDEX t9v ON t9 USING ivfflat (v1 vector_l2_ops) " +
+      "WITH (lists = 2, probe_lists = 2)")
     try {
       e.executeSql("INSERT INTO t9 VALUES (NULL, 3)")
       assert(e.table("t9").count() == 3)
-      val got = e.executeSql("SELECT v2 FROM t9 WHERE v1 IS NOT NULL " +
-        "ORDER BY ARRAY [0.0, 0.0] <-> v1, v2 LIMIT 2")
-        .collect().map(_.getInt(0)).toSeq
-      assert(got == Seq(1, 2))
-    } finally graft.index.VectorIndexes.drop("t9i")
+      Seq("hnsw", "ivfflat").foreach { method =>
+        e.executeSql(s"set vector_index_method=$method")
+        val got = e.executeSql("SELECT v2 FROM t9 WHERE v1 IS NOT NULL " +
+          "ORDER BY ARRAY [0.0, 0.0] <-> v1, v2 LIMIT 2")
+          .collect().map(_.getInt(0)).toSeq
+        assert(got == Seq(1, 2), method)
+      }
+      // the NULL row is unindexable: neither index holds it
+      graft.index.VectorIndexes.get("t9v").map(_.model) match {
+        case Some(graft.index.VectorIndexes.IvfModel(m, _)) =>
+          assert(m.buckets.count() == 2)
+        case other => fail(s"t9v is not an ivfflat index: $other")
+      }
+      graft.index.VectorIndexes.get("t9i").map(_.model) match {
+        case Some(graft.index.VectorIndexes.HnswModel(idx, _)) =>
+          assert(idx.size == 2)
+        case other => fail(s"t9i is not an hnsw index: $other")
+      }
+    } finally {
+      e.executeSql("set vector_index_method=")
+      graft.index.VectorIndexes.drop("t9i")
+      graft.index.VectorIndexes.drop("t9v")
+    }
+  }
+
+  test("IVFFlat upkeep: INSERTs keep the bucket plan size; KNN == brute") {
+    import graft.index.VectorIndexes
+    val e = mkEngine
+    e.executeSql("CREATE TABLE up1(v VECTOR(2), tag integer)")
+    e.executeSql("INSERT INTO up1 VALUES (ARRAY [0.0, 0.0], 0), " +
+      "(ARRAY [1.0, 0.1], 1), (ARRAY [0.2, 1.0], 2), (ARRAY [1.3, 1.2], 3)")
+    // probe_lists = lists -> exact
+    e.executeSql("CREATE INDEX up1i ON up1 USING ivfflat " +
+      "(v vector_l2_ops) WITH (lists = 2, probe_lists = 2)")
+    def planNodes(): Int = VectorIndexes.get("up1i").map(_.model) match {
+      case Some(VectorIndexes.IvfModel(m, _)) =>
+        var n = 0
+        m.buckets.queryExecution.logical.foreach(_ => n += 1)
+        n
+      case other => fail(s"up1i is not an ivfflat index: $other")
+    }
+    def knn(method: String, q: String): (Seq[Int], Boolean) = {
+      e.executeSql(s"set vector_index_method=$method")
+      val df = e.executeSql(s"SELECT tag FROM up1 ORDER BY ARRAY [$q] <-> v LIMIT 3")
+      (df.collect().map(_.getInt(0)).toSeq,
+        df.queryExecution.optimizedPlan.toString.contains("__graft_knn_id"))
+    }
+    try {
+      val nodes = (1 to 5).map { i =>
+        val q = s"${0.5 + 0.37 * i}, ${0.3 + 0.21 * i}"
+        e.executeSql(s"INSERT INTO up1 VALUES (ARRAY [$q], ${10 + i})")
+        val (viaIndex, rewritten) = knn("ivfflat", q)
+        val (brute, _) = knn("none", q)
+        assert(rewritten, s"INSERT $i: KNN did not use the index")
+        assert(viaIndex == brute && viaIndex.head == 10 + i, s"INSERT $i")
+        planNodes()
+      }
+      assert(nodes.forall(_ == nodes.head), s"bucket plan nodes: $nodes")
+    } finally {
+      e.executeSql("set vector_index_method=")
+      VectorIndexes.drop("up1i")
+    }
   }
 
   test("TIMESTAMP columns: literal insert, comparison, ordering") {
@@ -464,8 +523,44 @@ class EngineSpec extends SparkSpecBase {
       val after = e2.executeSql(knnSql).collect().map(_.getInt(0)).toSeq
       assert(after == before && after == Seq(1, 4))
       // the restored model itself serves (probe-all ivf is exact)
-      val direct = meta.get.model.scan(spark, Seq(1.0, 0.0, 0.0), 2)
+      val direct = meta.get.model.scanIdsVecs(spark, Seq(1.0, 0.0, 0.0), 2)
       assert(direct.count() == 2)
     } finally graft.index.VectorIndexes.drop("prti")
+  }
+
+  test("a reloaded index is rebuilt after DELETE") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-registry").toString
+    def mkTable(e: Engine): Unit = {
+      e.executeSql("CREATE TABLE prd(v VECTOR(3), tag integer)")
+      e.executeSql("INSERT INTO prd VALUES (ARRAY [1.0, 0.0, 0.0], 1), " +
+        "(ARRAY [0.0, 1.0, 0.0], 2), (ARRAY [0.0, 0.0, 1.0], 3), " +
+        "(ARRAY [0.9, 0.1, 0.0], 4)")
+    }
+    // no `, tag` sort key: an extra key would keep the rule from
+    // rewriting, and the KNN must go through the reloaded index
+    val knnSql = "SELECT tag FROM prd ORDER BY ARRAY [1.0, 0.0, 0.3] <-> v LIMIT 2"
+    try {
+      val e1 = mkEngine
+      mkTable(e1)
+      e1.executeSql("CREATE INDEX prdi ON prd USING ivfflat " +
+        "(v vector_l2_ops) WITH (lists = 2, probe_lists = 2)")
+      e1.saveIndexRegistry(root)
+      graft.index.VectorIndexes.drop("prdi") // simulate process death
+      val e2 = mkEngine
+      mkTable(e2)
+      e2.loadIndexRegistry(root)
+      e2.executeSql("DELETE FROM prd WHERE tag = 1")
+      val plan = e2.executeSql(s"EXPLAIN (o) $knnSql")
+        .collect().map(_.getString(0)).mkString("\n")
+      assert(plan.contains("__graft_knn_id"), plan)
+      val got = e2.executeSql(knnSql).collect().map(_.getInt(0)).toSeq
+      e2.executeSql("set vector_index_method=none")
+      val brute = e2.executeSql(knnSql).collect().map(_.getInt(0)).toSeq
+      assert(got == brute && got == Seq(4, 3))
+    } finally {
+      spark.conf.unset("graft.vector_index_method")
+      graft.index.VectorIndexes.drop("prdi")
+    }
   }
 }

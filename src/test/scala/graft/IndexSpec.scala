@@ -449,14 +449,18 @@ class IndexSpec extends SparkSpecBase {
     VectorIndexes.drop("t_ivf"); VectorIndexes.drop("t_hnsw")
     VectorIndexes.createIvfFlat("t_ivf", "emb_t", emb, "vec_id", "v", 8, 8)
     VectorIndexes.createHnsw("t_hnsw", "emb_t", emb, "vec_id", "v", 8, 64, 40)
+    // both indexes sit on `emb`'s plan leaf — the key the rule selects by
+    val leaf = VectorIndexes.get("t_ivf").flatMap(_.leaf)
+    assert(leaf.isDefined && VectorIndexes.get("t_hnsw").flatMap(_.leaf) == leaf)
     def pick(method: String) =
-      VectorIndexes.select("emb_t", "v", DistanceMetric.L2, method).map(_.method)
+      VectorIndexes.selectByLeaf(leaf.get, "v", DistanceMetric.L2, method)
+        .map(_.method)
     assert(pick("ivfflat").contains("ivfflat"))
     assert(pick("hnsw").contains("hnsw"))
     assert(pick("none").isEmpty)
     assert(pick("").nonEmpty) // unset: any matching-metric index
     // unset + wrong metric still matches some index (reference quirk :52-59)
-    assert(VectorIndexes.select("emb_t", "v", DistanceMetric.Cosine, "")
+    assert(VectorIndexes.selectByLeaf(leaf.get, "v", DistanceMetric.Cosine, "")
       .nonEmpty)
     VectorIndexes.drop("t_ivf"); VectorIndexes.drop("t_hnsw")
   }
