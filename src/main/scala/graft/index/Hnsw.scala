@@ -271,7 +271,7 @@ final class HnswIndex(
       : Seq[(Long, Double)] =
     scanFull(query, k, ef).map(t => (t._1, t._3))
 
-  /** scan() + the stored vectors (for vector-valued semi-joins).
+  /** scan() + the stored vectors.
     *
     * Probe-all mode (ef >= |vectors|): seed the layer-0 search with
     * EVERY vertex instead of the greedy descent. The beam with ef >= n

@@ -42,16 +42,20 @@ final case class IvfFlatModel(
   @transient private lazy val nonEmptyCache: Seq[Int] =
     IvfFlat.nonEmptyBuckets(buckets)
 
+  /** The `probeLists` buckets among `nonEmpty` whose centroids are
+    * nearest `q`, nearest first (ties by bucket id) — reference
+    * ScanVectorKey's centroid ranking, on the driver (lists × dim). */
+  def probed(q: Array[Double], nonEmpty: Iterable[Int]): Seq[Int] =
+    nonEmpty.toSeq
+      .map(b => b -> NearestCentroid.distance(q, centroids(b), metric.id))
+      .sortBy { case (b, d) => (d, b) }
+      .take(probeLists).map(_._1)
+
   /** Non-empty-bucket centroid ranking happens on the driver (tiny);
     * the data-side work is a pruned scan + top-k. */
   def scan(query: Seq[Double], k: Int, tieBreak: Option[String] = None)
       : DataFrame = {
-    val q = query.toArray
-    val nonEmpty = nonEmptyCache
-    val probed = nonEmpty
-      .map(b => b -> NearestCentroid.distance(q, centroids(b), metric.id))
-      .sortBy { case (b, d) => (d, b) }
-      .take(probeLists).map(_._1)
+    val probed = this.probed(query.toArray, nonEmptyCache)
     val pruned = buckets.filter(col("__bucket").isin(probed: _*))
     Knn.bruteForce(pruned, vecCol, query, k, metric, tieBreak)
       .drop("__bucket")
@@ -181,12 +185,8 @@ final case class IvfFlatModel(
       .as[(Long, Array[Double])].collect()
     // per query: the probeLists nearest non-empty buckets (driver —
     // |q| × lists distances over broadcast-small centroids)
-    val probedOf: Array[Array[Int]] = qRows.map { case (_, qv) =>
-      nonEmpty
-        .map(b => b -> NearestCentroid.distance(qv, centroids(b), metricId))
-        .sortBy { case (b, dd) => (dd, b) }
-        .take(probeLists).map(_._1).toArray
-    }
+    val probedOf: Array[Array[Int]] =
+      qRows.map { case (_, qv) => probed(qv, nonEmpty).toArray }
     // inverted: bucket -> ordinals of the queries probing it
     val byBucket: Map[Int, Array[Int]] = probedOf.zipWithIndex
       .flatMap { case (bs, qi) => bs.map(_ -> qi) }

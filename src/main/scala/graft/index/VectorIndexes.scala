@@ -20,29 +20,54 @@ import org.apache.spark.sql.graft.DistanceMetric
   */
 object VectorIndexes {
 
+  /** A registered index as the KNN rewrite serves it. Contract: an
+    * index's ids are the row ids of the table it indexes (`idCol`; the
+    * engine's `__rid`), so the rewrite can filter that table to them. */
   sealed trait Model {
-    /** (__knn_id, __knn_vec) — id + stored vector of the top-k, for the
-      * optimizer rule's semi-join (vector-valued when the id column
-      * isn't available in the target plan). */
-    def scanIdsVecs(spark: SparkSession, query: Seq[Double], k: Int)
-        : DataFrame
+    /** The row ids a KNN for `query` must rank — the rewrite keeps the
+      * query's own Sort+Limit, which ranks them with exact distances. */
+    def candidateIds(query: Array[Double], k: Int): Array[Long]
   }
-  final case class IvfModel(m: IvfFlatModel, idCol: String) extends Model {
-    def scanIdsVecs(spark: SparkSession, query: Seq[Double], k: Int)
-        : DataFrame = {
+
+  /** IVFFlat served from `lists`, its posting lists on the driver;
+    * `m` stays the bucketed model the batch paths and `save` use. */
+  final case class IvfModel(m: IvfFlatModel, idCol: String)(
+      val lists: PostingLists) extends Model {
+    /** Every id in the `probe_lists` nearest non-empty lists. */
+    def candidateIds(query: Array[Double], k: Int): Array[Long] =
+      m.probed(query, lists.ids.keys).flatMap(b => lists.ids(b)).toArray
+  }
+  object IvfModel {
+    /** `m` with posting lists collected from its buckets. */
+    def of(m: IvfFlatModel, idCol: String): IvfModel =
+      IvfModel(m, idCol)(PostingLists.empty.add(m.buckets, idCol))
+  }
+
+  /** IVFFlat posting lists: bucket -> row ids (no vectors) for the
+    * non-empty buckets, and the highest id they hold — rows above it
+    * are the ones an INSERT adds. */
+  final case class PostingLists(ids: Map[Int, Array[Long]], maxId: Long) {
+    /** These lists plus the rows of `rows`, a frame in the bucket
+      * layout (`__bucket`, `idCol`): one (bucket, id) collect. */
+    def add(rows: DataFrame, idCol: String): PostingLists = {
       import org.apache.spark.sql.functions.col
-      m.scan(query, k, tieBreak = Some(idCol))
-        .select(col(idCol).as("__knn_id"),
-          col(m.vecCol).cast("array<double>").as("__knn_vec"))
+      val pairs = rows.filter(col(idCol).isNotNull)
+        .select(col("__bucket"), col(idCol).cast("long")).collect()
+        .map(r => (r.getInt(0), r.getLong(1)))
+      if (pairs.isEmpty) this
+      else PostingLists(
+        pairs.groupBy(_._1).foldLeft(ids) { case (acc, (b, ps)) =>
+          acc.updated(b, acc.getOrElse(b, Array.emptyLongArray) ++ ps.map(_._2))
+        },
+        math.max(maxId, pairs.map(_._2).max))
     }
+  }
+  object PostingLists {
+    val empty: PostingLists = PostingLists(Map.empty, -1L)
   }
   final case class HnswModel(idx: HnswIndex, idCol: String) extends Model {
-    def scanIdsVecs(spark: SparkSession, query: Seq[Double], k: Int)
-        : DataFrame = {
-      import spark.implicits._
-      idx.scanFull(query.toArray, k).map(t => (t._1, t._2.toSeq))
-        .toDF("__knn_id", "__knn_vec")
-    }
+    def candidateIds(query: Array[Double], k: Int): Array[Long] =
+      idx.scanFull(query, k).map(_._1).toArray
   }
 
   final case class IndexMeta(
@@ -73,7 +98,7 @@ object VectorIndexes {
       metric: DistanceMetric.Value = DistanceMetric.L2): IvfFlatModel = {
     val m = IvfFlat.build(df, Seq(idCol), vecCol, lists, probeLists, metric)
     register(IndexMeta(name, table, vecCol, "ivfflat", metric,
-      IvfModel(m, idCol), idCol, leafOf(df)))
+      IvfModel.of(m, idCol), idCol, leafOf(df)))
     m
   }
 
@@ -120,8 +145,8 @@ object VectorIndexes {
   }
 
   /** Reopen a persisted registry: every entry is registered with its
-    * reloaded model (IVFFlat probes serve from the partition-pruned
-    * saved layout) and `leaf = None` — callers that route the
+    * reloaded model (IVFFlat posting lists re-collected from the saved
+    * layout) and `leaf = None` — callers that route the
     * optimizer rule re-derive leaves against their current table
     * plans (Engine.loadIndexRegistry does). */
   def loadRegistry(spark: SparkSession, root: String): Seq[IndexMeta] =
@@ -131,7 +156,7 @@ object VectorIndexes {
       val idCol = r.getAs[String]("id_col")
       val model = method match {
         case "ivfflat" =>
-          IvfModel(IvfFlat.load(spark, s"$root/$name/ivf"), idCol)
+          IvfModel.of(IvfFlat.load(spark, s"$root/$name/ivf"), idCol)
         case "hnsw" =>
           val p = new org.apache.hadoop.fs.Path(s"$root/$name/hnsw.bin")
           val fs =

@@ -704,7 +704,7 @@ object VectorOps {
     // The KNN optimizer rule end-to-end (reference
     // OptimizeAsVectorIndexScan): a PLAIN orderBy(dist).limit(k) query
     // is silently served through the registered IVFFlat index via a
-    // semi-join rewrite; probe=lists keeps it exact, so the brute-force
+    // candidate-id filter; probe=lists keeps it exact, so the brute-force
     // oracle applies. Materialized eagerly so the session-global rule +
     // index registration can be dropped before other queries plan.
     "q38_knn_rewrite" -> ((s, d) => {

@@ -473,6 +473,52 @@ class EngineSpec extends SparkSpecBase {
     }
   }
 
+  test("an indexed KNN is one Spark job: a candidate filter, no join") {
+    import graft.index.VectorIndexes
+    import org.apache.spark.graft.JobCounter
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    val e = mkEngine
+    e.executeSql("CREATE TABLE oj(v VECTOR(2), tag integer)")
+    e.executeSql("INSERT INTO oj VALUES " + (0 until 30).map(i =>
+      s"(ARRAY [${i * 7 % 30 / 10.0}, ${i * 11 % 30 / 10.0}], $i)")
+      .mkString(", "))
+    e.executeSql("CREATE INDEX oji ON oj USING ivfflat (v vector_l2_ops) " +
+      "WITH (lists = 4, probe_lists = 2)")
+    e.executeSql("CREATE INDEX ojh ON oj USING hnsw (v vector_l2_ops) " +
+      "WITH (m = 4, ef_construction = 16, ef_search = 16)")
+    val q = "ORDER BY v <-> ARRAY [1.1, 1.7] LIMIT 3"
+    // the statement's jobs, from parsing to its collected rows
+    def run(method: String, sql: String): (LogicalPlan, Int) = {
+      e.executeSql(s"set vector_index_method=$method")
+      JobCounter.jobsOf(spark.sparkContext) {
+        val df = e.executeSql(sql)
+        df.collect()
+        df.queryExecution.optimizedPlan
+      }
+    }
+    try {
+      def check(when: String): Unit = Seq("ivfflat", "hnsw").foreach { m =>
+        val (plan, jobs) = run(m, s"SELECT tag FROM oj $q")
+        assert(jobs == 1, s"$m $when: $jobs jobs")
+        assert(plan.collectFirst { case j: Join => j }.isEmpty &&
+          plan.toString.contains("__graft_knn_id"), s"$m $when:\n$plan")
+      }
+      check("after CREATE INDEX")
+      e.executeSql("INSERT INTO oj VALUES (ARRAY [1.1, 1.7], 30)")
+      check("after INSERT")
+      // the WHERE-filtered KNN keeps its brute-force plan
+      val filtered = s"SELECT tag FROM oj WHERE tag % 2 = 0 $q"
+      val (viaIndex, _) = run("hnsw", filtered)
+      val (brute, _) = run("none", filtered)
+      assert(viaIndex.sameResult(brute), s"$viaIndex\nvs\n$brute")
+      assert(!viaIndex.toString.contains("__graft_knn_id"))
+    } finally {
+      e.executeSql("set vector_index_method=")
+      VectorIndexes.drop("oji")
+      VectorIndexes.drop("ojh")
+    }
+  }
+
   test("TIMESTAMP columns: literal insert, comparison, ordering") {
     // the reference accepts TIMESTAMP at CREATE but its binder never
     // parses a timestamp literal (src/type/timestamp_type.cpp holds
@@ -522,9 +568,12 @@ class EngineSpec extends SparkSpecBase {
         "restored index must re-attach to the new table plan")
       val after = e2.executeSql(knnSql).collect().map(_.getInt(0)).toSeq
       assert(after == before && after == Seq(1, 4))
-      // the restored model itself serves (probe-all ivf is exact)
-      val direct = meta.get.model.scanIdsVecs(spark, Seq(1.0, 0.0, 0.0), 2)
-      assert(direct.count() == 2)
+      // the restored model itself serves: under probe-all its
+      // candidates are every indexed row of the live table
+      val candidates = meta.get.model.candidateIds(Array(1.0, 0.0, 0.0), 2)
+      val rids = e2.table("prt").filter("v IS NOT NULL")
+        .select(Engine.RowId).collect().map(_.getLong(0))
+      assert(candidates.sorted.toSeq == rids.sorted.toSeq && rids.length == 4)
     } finally graft.index.VectorIndexes.drop("prti")
   }
 

@@ -21,7 +21,7 @@ class RewriteSpec extends SparkSpecBase {
     .orderBy(l2Dist(col("embedding"), vecLit(query)).asc, col("vec_id").asc)
     .limit(12)
 
-  test("rule rewrites TopN(dist) to an index-served semi-join, exactly") {
+  test("rule rewrites TopN(dist) to an index candidate filter, exactly") {
     VectorIndexes.drop("rw_ivf")
     VectorIndexes.enableRewrite(spark)
     val expected = knnQuery.select("vec_id").collect().map(_.getLong(0)).toSeq
