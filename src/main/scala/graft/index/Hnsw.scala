@@ -306,9 +306,8 @@ object Hnsw {
   /** Flat-int-array neighbor list: append with a linear dup check,
     * swap-remove — the degree bound (m² at layer 0) keeps `n` tiny, so
     * linear scans over a primitive array are faster than any hash set
-    * and allocate nothing. Serializable so sub-graphs survive
-    * [[DistributedHnswIndex.save]]/[[Hnsw.loadPartitioned]] and the
-    * deep-copy insert path unchanged. */
+    * and allocate nothing. Serializable so sub-graphs survive the
+    * deep-copy insert path and the registry's saved graph unchanged. */
   private[index] final class Nbrs extends Serializable {
     var a: Array[Int] = new Array[Int](8)
     var n: Int = 0
@@ -376,8 +375,8 @@ object Hnsw {
     * driver-built graph: 2^23 doubles = 64 MB — the same bound
     * [[IvfFlat.driverTrainLimit]] applies to its driver-local k-means.
     * Above it [[build]] refuses loudly (the collect would OOM the
-    * driver long before the graph finishes) and [[buildAuto]] routes
-    * to [[buildPartitioned]], the scale path. */
+    * driver long before the graph finishes): [[buildPartitioned]] is
+    * the scale path. */
   val driverBuildLimit: Long = 1L << 23
 
   /** One cheap agg job: (row count, max vector length). Far cheaper
@@ -394,8 +393,8 @@ object Hnsw {
     * id for reproducibility (the reference shuffles with an unseeded
     * RNG — we pin determinism instead; recall is equivalent).
     * BOUNDED at [[driverBuildLimit]] cells: an over-threshold corpus
-    * must go through [[buildPartitioned]] (or [[buildAuto]], which
-    * routes by size) — failing fast here beats an OOM mid-collect. */
+    * must go through [[buildPartitioned]] — failing fast here beats an
+    * OOM mid-collect. */
   def build(df: DataFrame, idCol: String, vecCol: String,
       m: Int, efConstruction: Int, efSearch: Int,
       metric: DistanceMetric.Value = DistanceMetric.L2,
@@ -405,8 +404,8 @@ object Hnsw {
     val cells = corpusCells(df, vecCol)
     require(cells <= driverLimit,
       s"Hnsw.build: corpus is $cells doubles (> $driverLimit = 64 MB " +
-        "driver bound) — use Hnsw.buildPartitioned (or buildAuto) for " +
-        "over-threshold corpora")
+        "driver bound) — use Hnsw.buildPartitioned for over-threshold " +
+        "corpora")
     val rows = df
       .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .filter(col(vecCol).isNotNull) // null vectors are unindexable
@@ -415,46 +414,6 @@ object Hnsw {
     rows.foreach(r => idx.insert(r.getLong(0), r.getSeq[Double](1).toArray))
     idx
   }
-
-  /** Uniform serving surface over the two build shapes, so size-routed
-    * callers ([[buildAuto]]) don't fork on the concrete type. */
-  sealed trait Serving {
-    def scan(query: Array[Double], k: Int): Seq[(Long, Double)]
-    def knnJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
-        k: Int): DataFrame
-    def isPartitioned: Boolean
-  }
-  final class DriverServing(val idx: HnswIndex) extends Serving {
-    def scan(query: Array[Double], k: Int): Seq[(Long, Double)] =
-      idx.scan(query, k)
-    def knnJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
-        k: Int): DataFrame = Hnsw.knnJoin(queries, qIdCol, qVecCol, idx, k)
-    def isPartitioned = false
-  }
-  final class PartitionedServing(val idx: DistributedHnswIndex)
-      extends Serving {
-    def scan(query: Array[Double], k: Int): Seq[(Long, Double)] =
-      idx.scan(query, k)
-    def knnJoin(queries: DataFrame, qIdCol: String, qVecCol: String,
-        k: Int): DataFrame = idx.knnJoin(queries, qIdCol, qVecCol, k)
-    def isPartitioned = true
-  }
-
-  /** Size-routed build: the driver graph when the corpus fits
-    * [[driverBuildLimit]], per-partition sub-graphs
-    * ([[buildPartitioned]]) when it doesn't — the caller never has to
-    * know which side of the bound the table is on. */
-  def buildAuto(df: DataFrame, idCol: String, vecCol: String,
-      m: Int, efConstruction: Int, efSearch: Int,
-      metric: DistanceMetric.Value = DistanceMetric.L2,
-      numPartitions: Int = 0, seed: Long = 42L,
-      driverLimit: Long = driverBuildLimit): Serving =
-    if (corpusCells(df, vecCol) <= driverLimit)
-      new DriverServing(build(df, idCol, vecCol, m, efConstruction,
-        efSearch, metric, seed, driverLimit))
-    else
-      new PartitionedServing(buildPartitioned(df, idCol, vecCol, m,
-        efConstruction, efSearch, metric, numPartitions, seed))
 
   /** Serve a KNN scan as a DataFrame (id, dist), distance-ascending. */
   def scanAsDf(spark: SparkSession, idx: HnswIndex,
@@ -592,11 +551,6 @@ object Hnsw {
     def numParts: Int = parts.partitions.length
     def size: Long = parts.map(_.size.toLong).sum().toLong
     def unpersist(): Unit = parts.unpersist()
-
-    /** Persist the sub-graphs to storage, one serialized object per
-      * partition — the restart-surviving layout; reopen with
-      * [[Hnsw.loadPartitioned]]. */
-    def save(path: String): Unit = parts.saveAsObjectFile(path)
   }
 
   /** Deep copy via a serialization round-trip — the safe way to derive
@@ -609,14 +563,6 @@ object Hnsw {
       new java.io.ByteArrayInputStream(bos.toByteArray))
     ois.readObject().asInstanceOf[HnswIndex]
   }
-
-  /** Reopen a [[DistributedHnswIndex.save]]d index: sub-graphs are read
-    * and cached where they land, never on the driver. */
-  def loadPartitioned(spark: SparkSession, path: String)
-      : DistributedHnswIndex =
-    new DistributedHnswIndex(
-      spark.sparkContext.objectFile[HnswIndex](path)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   def buildPartitioned(df: DataFrame, idCol: String, vecCol: String,
       m: Int, efConstruction: Int, efSearch: Int,

@@ -3,7 +3,7 @@ package graft.index
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graft.DistanceMetric
+import org.apache.spark.sql.graft.{DistanceMetric, ListedBucket, VectorDistanceApi}
 
 /** Vector-index catalog and index selection.
   *
@@ -30,12 +30,13 @@ object VectorIndexes {
   }
 
   /** IVFFlat served from `lists`, its posting lists on the driver;
-    * `m` stays the bucketed model the batch paths and `save` use. */
+    * `m` is the bucketed model the batch paths and `save` use (an
+    * engine index's `m.buckets` is `lists.layout` over its table). */
   final case class IvfModel(m: IvfFlatModel, idCol: String)(
       val lists: PostingLists) extends Model {
     /** Every id in the `probe_lists` nearest non-empty lists. */
     def candidateIds(query: Array[Double], k: Int): Array[Long] =
-      m.probed(query, lists.ids.keys).flatMap(b => lists.ids(b)).toArray
+      lists.candidateIds(m.probed(query, lists.nonEmpty))
   }
   object IvfModel {
     /** `m` with posting lists collected from its buckets. */
@@ -43,27 +44,57 @@ object VectorIndexes {
       IvfModel(m, idCol)(PostingLists.empty.add(m.buckets, idCol))
   }
 
-  /** IVFFlat posting lists: bucket -> row ids (no vectors) for the
-    * non-empty buckets, and the highest id they hold — rows above it
-    * are the ones an INSERT adds. */
-  final case class PostingLists(ids: Map[Int, Array[Long]], maxId: Long) {
+  /** IVFFlat posting lists as one assignment: each listed row id
+    * (`ids`, ascending; no vectors) and its bucket (`buckets`, same
+    * position). Rows above `maxId` are the ones an INSERT adds. */
+  final case class PostingLists(ids: Array[Long], buckets: Array[Int]) {
+    def maxId: Long = if (ids.isEmpty) -1L else ids.last
+
+    /** The buckets holding at least one id. */
+    lazy val nonEmpty: Seq[Int] = buckets.distinct.toSeq
+
     /** These lists plus the rows of `rows`, a frame in the bucket
-      * layout (`__bucket`, `idCol`): one (bucket, id) collect. */
+      * layout (`__bucket`, `idCol`) whose ids all lie above `maxId`:
+      * one (bucket, id) collect. */
     def add(rows: DataFrame, idCol: String): PostingLists = {
       import org.apache.spark.sql.functions.col
       val pairs = rows.filter(col(idCol).isNotNull)
-        .select(col("__bucket"), col(idCol).cast("long")).collect()
-        .map(r => (r.getInt(0), r.getLong(1)))
+        .select(col(idCol).cast("long"), col("__bucket")).collect()
+        .map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1)
+      require(pairs.isEmpty || ids.isEmpty || pairs.head._1 > maxId,
+        s"posting lists: new id ${pairs.head._1} is not above $maxId")
       if (pairs.isEmpty) this
-      else PostingLists(
-        pairs.groupBy(_._1).foldLeft(ids) { case (acc, (b, ps)) =>
-          acc.updated(b, acc.getOrElse(b, Array.emptyLongArray) ++ ps.map(_._2))
-        },
-        math.max(maxId, pairs.map(_._2).max))
+      else PostingLists(ids ++ pairs.map(_._1), buckets ++ pairs.map(_._2))
+    }
+
+    /** The ids listed in `probed` buckets, ascending. */
+    def candidateIds(probed: Seq[Int]): Array[Long] = {
+      val mask = new Array[Boolean](if (probed.isEmpty) 0 else probed.max + 1)
+      probed.foreach(b => mask(b) = true)
+      val out = Array.newBuilder[Long]
+      var i = 0
+      while (i < ids.length) {
+        val b = buckets(i)
+        if (b < mask.length && mask(b)) out += ids(i)
+        i += 1
+      }
+      out.result()
+    }
+
+    /** `rows` in the bucket layout (`__bucket`, `idCol`, `vecCol`, the
+      * columns [[IvfFlatModel.assign]] selects), each at its listed
+      * bucket; rows these lists do not hold are left out. */
+    def layout(rows: DataFrame, idCol: String, vecCol: String): DataFrame = {
+      import org.apache.spark.sql.functions.col
+      val bucket = VectorDistanceApi.column(ListedBucket(
+        VectorDistanceApi.expression(col(idCol).cast("long")), ids, buckets))
+      rows.select(bucket.as("__bucket"), col(idCol),
+          col(vecCol).cast("array<double>").as(vecCol))
+        .filter(col("__bucket").isNotNull)
     }
   }
   object PostingLists {
-    val empty: PostingLists = PostingLists(Map.empty, -1L)
+    val empty: PostingLists = PostingLists(Array.emptyLongArray, Array.emptyIntArray)
   }
   final case class HnswModel(idx: HnswIndex, idCol: String) extends Model {
     def candidateIds(query: Array[Double], k: Int): Array[Long] =
@@ -117,8 +148,7 @@ object VectorIndexes {
     * plus each index's own persisted layout under `root/<name>/`
     * (IVFFlat's bucketed parquet via `IvfFlatModel.save`; the
     * driver-side HNSW graph Java-serialized — it is a driver object by
-    * design, see SURVEY §8.4; the partitioned variant persists via
-    * `saveAsObjectFile` separately). The reference's catalog is
+    * design, see SURVEY §8.4). The reference's catalog is
     * equally in-memory (catalog.h:293-350) — this is scale-hardening
     * beyond parity: an engine restart reopens its indexes instead of
     * rebuilding them. */

@@ -2,11 +2,11 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, IntegerType, IntegralType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, IntegralType, LongType}
 
 /** The reference's one genuinely custom optimizer rule, Spark-first:
   * `OptimizeAsVectorIndexScan` (reference src/optimizer/
@@ -155,6 +155,28 @@ case class KnnIdFilter(child: Expression, ids: Array[Long])
   override def toString: String = s"__graft_knn_id($child, ${ids.length} ids)"
 
   override protected def withNewChildInternal(c: Expression): KnnIdFilter =
+    copy(child = c)
+}
+
+/** The bucket an IVFFlat's posting lists hold `id` in: a binary search
+  * over their ascending `ids`, read at the same position of `buckets`;
+  * null when the lists do not hold the id. How
+  * [[graft.index.VectorIndexes.PostingLists.layout]] gives a table's
+  * rows in the bucket layout. Prints as `__graft_bucket(<id>, <n> ids)`. */
+case class ListedBucket(child: Expression, ids: Array[Long],
+    buckets: Array[Int]) extends UnaryExpression with CodegenFallback {
+
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = true
+
+  override protected def nullSafeEval(id: Any): Any = {
+    val i = java.util.Arrays.binarySearch(ids, id.asInstanceOf[Long])
+    if (i >= 0) buckets(i) else null
+  }
+
+  override def toString: String = s"__graft_bucket($child, ${ids.length} ids)"
+
+  override protected def withNewChildInternal(c: Expression): ListedBucket =
     copy(child = c)
 }
 

@@ -436,6 +436,7 @@ class EngineSpec extends SparkSpecBase {
 
   test("IVFFlat upkeep: INSERTs keep the bucket plan size; KNN == brute") {
     import graft.index.VectorIndexes
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
     val e = mkEngine
     e.executeSql("CREATE TABLE up1(v VECTOR(2), tag integer)")
     e.executeSql("INSERT INTO up1 VALUES (ARRAY [0.0, 0.0], 0), " +
@@ -456,6 +457,18 @@ class EngineSpec extends SparkSpecBase {
       (df.collect().map(_.getInt(0)).toSeq,
         df.queryExecution.optimizedPlan.toString.contains("__graft_knn_id"))
     }
+    // the served layout, after cache substitution, reads only the live
+    // table's cache: one leaf, the table's InMemoryRelation
+    def readsLiveCacheOnly(): Boolean = VectorIndexes.get("up1i").map(_.model) match {
+      case Some(VectorIndexes.IvfModel(m, _)) =>
+        val leaves = m.buckets.queryExecution.withCachedData.collectLeaves()
+        val live = e.table("up1").queryExecution.withCachedData.collectLeaves()
+        (leaves ++ live).forall(_.isInstanceOf[InMemoryRelation]) &&
+          leaves.length == 1 && live.length == 1 &&
+          (leaves.head.asInstanceOf[InMemoryRelation].cacheBuilder eq
+            live.head.asInstanceOf[InMemoryRelation].cacheBuilder)
+      case other => fail(s"up1i is not an ivfflat index: $other")
+    }
     try {
       val nodes = (1 to 5).map { i =>
         val q = s"${0.5 + 0.37 * i}, ${0.3 + 0.21 * i}"
@@ -464,12 +477,60 @@ class EngineSpec extends SparkSpecBase {
         val (brute, _) = knn("none", q)
         assert(rewritten, s"INSERT $i: KNN did not use the index")
         assert(viaIndex == brute && viaIndex.head == 10 + i, s"INSERT $i")
+        assert(readsLiveCacheOnly(), s"INSERT $i: the layout reads more " +
+          "than the live table's cache")
         planNodes()
       }
       assert(nodes.forall(_ == nodes.head), s"bucket plan nodes: $nodes")
     } finally {
       e.executeSql("set vector_index_method=")
       VectorIndexes.drop("up1i")
+    }
+  }
+
+  test("an IVFFlat index outlives its table's sources: layout, save, reload") {
+    import graft.index.VectorIndexes
+    import org.apache.spark.sql.functions.{array, col, cos, sin}
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sources").toFile
+    val src = new java.io.File(tmp, "rows").toString
+    val root = new java.io.File(tmp, "registry").toString
+    spark.range(40).select(array(sin(col("id")), cos(col("id") * 0.7)).as("v"),
+      col("id").cast("int").as("tag")).write.parquet(src)
+    spark.read.parquet(src).createOrReplaceTempView("src_rows")
+    val e1 = mkEngine
+    e1.executeSql("CREATE TABLE srt(v VECTOR(2), tag integer)")
+    e1.executeSql("INSERT INTO srt SELECT v, tag FROM src_rows")
+    e1.executeSql("CREATE INDEX srti ON srt USING ivfflat (v vector_l2_ops) " +
+      "WITH (lists = 4, probe_lists = 2)")
+    e1.executeSql("INSERT INTO srt VALUES (ARRAY [3.0, 3.0], 100)")
+    // outside Spark: a Spark write would re-cache the table
+    Util.deleteRecursively(new java.io.File(src))
+    try {
+      val served = VectorIndexes.get("srti").map(_.model) match {
+        case Some(VectorIndexes.IvfModel(m, _)) =>
+          m.buckets.select(Engine.RowId, "v").collect()
+            .map(r => (r.getLong(0), r.getSeq[Double](1))).toSet
+        case other => fail(s"srti is not an ivfflat index: $other")
+      }
+      val rows = e1.table("srt").filter(col("v").isNotNull)
+        .select(Engine.RowId, "v").collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1))).toSet
+      assert(served == rows && rows.size == 41)
+      e1.saveIndexRegistry(root)
+      VectorIndexes.drop("srti") // simulate process death
+      // "restart": the new engine registers the table with its row ids
+      val e2 = mkEngine
+      e2.registerTable("srt", e1.table("srt"))
+      e2.loadIndexRegistry(root)
+      e2.executeSql("set vector_index_method=ivfflat")
+      val knn = e2.executeSql(
+        "SELECT tag FROM srt ORDER BY v <-> ARRAY [3.0, 3.0] LIMIT 1")
+      assert(knn.queryExecution.optimizedPlan.toString.contains("__graft_knn_id"))
+      assert(knn.collect().map(_.getInt(0)).toSeq == Seq(100))
+    } finally {
+      spark.conf.unset("graft.vector_index_method")
+      VectorIndexes.drop("srti")
+      Util.deleteRecursively(tmp)
     }
   }
 

@@ -125,18 +125,6 @@ class IndexSpec extends SparkSpecBase {
     idx.unpersist(); updated.unpersist()
   }
 
-  test("distributed hnsw survives save/load with identical scans") {
-    val idx = Hnsw.buildPartitioned(emb, "vec_id", "v", m = 8,
-      efConstruction = 64, efSearch = 40, numPartitions = 4)
-    val dir = java.nio.file.Files.createTempDirectory("hnsw_save")
-      .resolve("idx").toString
-    idx.save(dir)
-    val reopened = Hnsw.loadPartitioned(spark, dir)
-    assert(reopened.size == idx.size)
-    assert(reopened.scan(query.toArray, 10) == idx.scan(query.toArray, 10))
-    idx.unpersist(); reopened.unpersist()
-  }
-
   test("pq: compressed shortlist + exact re-rank keeps recall >= 0.6") {
     val model = graft.index.Pq.build(emb, "vec_id", "v", m = 8, k = 64)
     // shortlist 10% of the corpus through 8-byte codes, re-rank exact
@@ -532,22 +520,5 @@ class IndexSpec extends SparkSpecBase {
         efSearch = 16, driverLimit = 100L)
     }
     assert(e.getMessage.contains("buildPartitioned"))
-  }
-
-  test("hnsw buildAuto routes an over-bound build to the partitioned " +
-      "path and serves identical top-k") {
-    // tiny driverLimit forces the route; probe-all ef makes both paths
-    // exact, so "identical top-k" is checkable against brute force
-    val routed = Hnsw.buildAuto(emb, "vec_id", "v", m = 8,
-      efConstruction = 64, efSearch = 1 << 24, driverLimit = 100L)
-    assert(routed.isPartitioned,
-      "over-bound corpus must build per-partition sub-graphs")
-    val under = Hnsw.buildAuto(emb, "vec_id", "v", m = 8,
-      efConstruction = 64, efSearch = 1 << 24)
-    assert(!under.isPartitioned, "in-bound corpus stays a driver graph")
-    val got = routed.scan(query.toArray, 10).map(_._1)
-    val direct = under.scan(query.toArray, 10).map(_._1)
-    assert(got == bruteIds(10), s"partitioned top-k != brute: $got")
-    assert(got == direct)
   }
 }

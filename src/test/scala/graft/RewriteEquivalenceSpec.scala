@@ -12,7 +12,9 @@ import graft.index.VectorIndexes
   * after every statement the KNN ids under `ivfflat` with
   * probe_lists = lists and under `hnsw` with ef_search above the row
   * count equal those of `none` (brute force), and both indexed runs
-  * are served through the index. */
+  * are served through the index. After every INSERT / DELETE the
+  * served IVFFlat bucket layout's (id, bucket) pairs also equal its
+  * posting lists, and its ids the live table's non-null `__rid`s. */
 class RewriteEquivalenceSpec extends SparkSpecBase {
   import RewriteEquivalenceSpec._
 
@@ -43,6 +45,23 @@ class RewriteEquivalenceSpec extends SparkSpecBase {
            else Nil)
       }
     }
+    // the served IVFFlat layout is the posting lists over the live table
+    def layoutMismatch(after: String): Seq[String] = {
+      val rids = e.table("pe").filter("v IS NOT NULL").select(Engine.RowId)
+        .collect().map(_.getLong(0)).sorted.toSeq
+      VectorIndexes.get("pe_ivf").map(_.model) match {
+        case Some(ivf @ VectorIndexes.IvfModel(m, idCol)) =>
+          val layout = m.buckets.select(idCol, "__bucket").collect()
+            .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+          val lists = ivf.lists.ids.toSeq.zip(ivf.lists.buckets.toSeq)
+          (if (layout != lists) Seq(s"layout after $after: $layout, lists $lists")
+           else Nil) ++
+            (if (layout.map(_._1) != rids) Seq(s"layout after $after: ids " +
+              s"${layout.map(_._1)}, table $rids") else Nil)
+        case None if rids.isEmpty => Nil
+        case other => Seq(s"pe_ivf after $after: $other")
+      }
+    }
     try {
       e.executeSql(s"CREATE TABLE pe(v VECTOR($Dim), tag integer)")
       insert(c.rows)
@@ -55,7 +74,7 @@ class RewriteEquivalenceSpec extends SparkSpecBase {
           case Insert(vs) => insert(vs)
           case Delete(m, r) => e.executeSql(s"DELETE FROM pe WHERE tag % $m = $r")
         }
-        disagreements(s.toString)
+        disagreements(s.toString) ++ layoutMismatch(s.toString)
       }
     } finally {
       e.executeSql("set vector_index_method=")
