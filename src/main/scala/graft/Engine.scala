@@ -316,7 +316,9 @@ final class Engine(val spark: SparkSession) {
   /** Bring one index up to its live table (InsertVectorEntry,
     * vector_index.h:21: every vector index sees the new rows). Build,
     * INSERT and registry load all end here:
-    *  - no model yet: build it from its DDL if the table has rows;
+    *  - no model yet: build it from its DDL if the table has rows (the
+    *    build covers every live row, so the two steps below add none
+    *    and skip their collect);
     *  - HNSW: insert the live rows above the graph's max id;
     *  - IVFFlat: extend the posting lists, the index's one membership,
     *    with the live rows above their max id, assigned to the model's
@@ -350,15 +352,18 @@ final class Engine(val spark: SparkSession) {
     def rowsAbove(m: VectorIndexes.IndexMeta, id: Long) =
       CachedRows.of(live).filter(col(m.idCol) > id && col(m.column).isNotNull)
         .select(col(m.idCol), col(m.column).cast("array<double>"))
+    val fresh = rec.built.isEmpty // built above from the live table
     val synced = built.map(m => m.model match {
       case VectorIndexes.HnswModel(idx, _) =>
         // max id, not idx.size (skipped NULL rows make size lag)
-        rowsAbove(m, idx.maxId).collect().foreach(r =>
+        if (!fresh) rowsAbove(m, idx.maxId).collect().foreach(r =>
           idx.insert(r.getLong(0), r.getSeq[Double](1).toArray))
         m
       case served @ VectorIndexes.IvfModel(ivf, idCol) =>
-        val lists = served.lists.add(
-          ivf.assign(rowsAbove(m, served.lists.maxId)), idCol)
+        val lists =
+          if (fresh) served.lists
+          else served.lists.add(
+            ivf.assign(rowsAbove(m, served.lists.maxId)), idCol)
         m.copy(model = VectorIndexes.IvfModel(ivf.copy(buckets =
           lists.layout(CachedRows.of(live), idCol, m.column)), idCol)(lists))
     })

@@ -210,17 +210,21 @@ final class HnswIndex(
     val maxDeg = if (layer == 0) mMax0 else mMax
     val nbrs = nbrsOf(layer, v)
     if (nbrs != null && nbrs.n > maxDeg) {
-      val keep = (0 until nbrs.n)
-        .map { i => val n = nbrs.a(i); (dist(vectors(v), vectors(n)), n) }
-        .sortBy(t => (t._1, t._2)).take(m).map(_._2)
+      val ds = new Array[Double](nbrs.n)
       var i = 0
+      while (i < nbrs.n) { ds(i) = dist(vectors(v), vectors(nbrs.a(i))); i += 1 }
+      val keep = Hnsw.nearestK(ds, nbrs.a, nbrs.n, m)
+      i = 0
       while (i < nbrs.n) {
         val old = nbrsOf(layer, nbrs.a(i))
         if (old != null) old.remove(v)
         i += 1
       }
-      nbrs.setTo(keep.toArray)
-      keep.foreach { n => slot(layer, n); layers(layer)(n).add(v) }
+      nbrs.setTo(keep)
+      i = 0
+      while (i < keep.length) {
+        slot(layer, keep(i)); layers(layer)(keep(i)).add(v); i += 1
+      }
     }
   }
 
@@ -302,6 +306,37 @@ final class HnswIndex(
 }
 
 object Hnsw {
+
+  /** The `k` ids of `vs(0 until n)` with the smallest `ds`, nearest
+    * first, ordered by `java.lang.Double.compare` on the distance and
+    * then by id — the total order of the boxed
+    * `sortBy(i => (ds(i), vs(i))).take(k)`, kept by insertion into a
+    * k-slot sorted buffer instead. */
+  private[index] def nearestK(ds: Array[Double], vs: Array[Int], n: Int,
+      k: Int): Array[Int] = {
+    val kk = math.min(k, n)
+    val kd = new Array[Double](kk)
+    val kv = new Array[Int](kk)
+    var size = 0
+    var i = 0
+    while (i < n) {
+      val d = ds(i); val v = vs(i)
+      var j = size // insertion point: after every kept entry <= (d, v)
+      while (j > 0 && {
+        val c = java.lang.Double.compare(d, kd(j - 1))
+        c < 0 || (c == 0 && v < kv(j - 1))
+      }) j -= 1
+      if (j < kk) {
+        val moved = math.min(size, kk - 1) - j
+        System.arraycopy(kd, j, kd, j + 1, moved)
+        System.arraycopy(kv, j, kv, j + 1, moved)
+        kd(j) = d; kv(j) = v
+        if (size < kk) size += 1
+      }
+      i += 1
+    }
+    kv
+  }
 
   /** Flat-int-array neighbor list: append with a linear dup check,
     * swap-remove — the degree bound (m² at layer 0) keeps `n` tiny, so

@@ -9,7 +9,11 @@ import org.apache.spark.sql.graft.{DistanceMetric, NearestCentroid}
   * Reference semantics (`src/storage/index/ivfflat_index.cpp`):
   *  - build = k-means seeded with the FIRST `lists` input vectors
   *    (`:82-84`), a fixed 50 assign+recompute iterations (`:86-89`);
-  *    empty clusters get zero-vector centroids (`:60-73`).
+  *    empty clusters get zero-vector centroids (`:60-73`). Here the
+  *    50 is a cap: the rounds stop at the first one whose recomputed
+  *    centroids are bit-equal to its input, because every later round
+  *    would repeat it exactly — same centroids and buckets, bit for
+  *    bit, in a fraction of the rounds.
   *  - insert = assign to nearest centroid, append to its bucket
   *    (`:92-95`); centroids never move after build.
   *  - scan = rank NON-EMPTY centroids by distance to the query, probe
@@ -269,20 +273,46 @@ object IvfFlat {
       }
     }
 
+  /** True when `a` and `b` hold the same doubles bit for bit (raw bits:
+    * `0.0` differs from `-0.0`, a NaN equals itself). A Lloyd round is a
+    * function of its input centroids' bits, so a round whose output
+    * is [[sameBits]] its input is a fixed point: every later round
+    * repeats it exactly. */
+  private[index] def sameBits(a: Array[Array[Double]],
+      b: Array[Array[Double]]): Boolean = {
+    if (a.length != b.length) return false // fewer seeds than lists
+    var i = 0
+    while (i < a.length) {
+      val x = a(i); val y = b(i); var p = 0
+      while (p < x.length) {
+        if (java.lang.Double.doubleToRawLongBits(x(p)) !=
+            java.lang.Double.doubleToRawLongBits(y(p))) return false
+        p += 1
+      }
+      i += 1
+    }
+    true
+  }
+
   /** Sequential Lloyd's over driver-held vectors — bit-exact analogue of
     * the reference loop (`ivfflat_index.cpp:86-89`). Returns
-    * (last-assignment centroids, final updated centroids): the
-    * reference buckets rows with the former and ranks probes with the
-    * latter (FindCentroids fills buckets before the update lands). */
+    * (last-assignment centroids, final updated centroids, rounds run):
+    * the reference buckets rows with the first and ranks probes with
+    * the second (FindCentroids fills buckets before the update lands).
+    * `iterations` caps the rounds; they stop early at the fixed point
+    * ([[sameBits]]), where both centroid sets are equal and equal to
+    * what the remaining rounds would return. */
   private[index] def localLloyd(vecs: Array[Array[Double]],
       init: Array[Array[Double]], lists: Int, iterations: Int,
       metric: DistanceMetric.Value)
-      : (Array[Array[Double]], Array[Array[Double]]) = {
+      : (Array[Array[Double]], Array[Array[Double]], Int) = {
     var cs = init
     var assignCs = init
     val dim = init(0).length
     val metricId = metric.id
-    for (_ <- 0 until iterations) {
+    var rounds = 0
+    var fixed = false
+    while (rounds < iterations && !fixed) {
       val sums = Array.fill(lists)(new Array[Double](dim))
       val counts = new Array[Long](lists)
       var j = 0
@@ -296,8 +326,10 @@ object IvfFlat {
       }
       assignCs = cs
       cs = recompute(sums, counts, lists, dim)
+      rounds += 1
+      fixed = sameBits(cs, assignCs)
     }
-    (assignCs, cs)
+    (assignCs, cs, rounds)
   }
 
   /** Build per the reference recipe. `df` must contain `idCols` and
@@ -329,11 +361,13 @@ object IvfFlat {
     require(centroids.nonEmpty, "ivfflat: empty input")
     val dim = centroids(0).length
 
-    // Fixed-iteration Lloyd's (reference :86-89). The at-scale recipe is
-    // "train on a (sampled) set that fits the driver, assign full-scan
-    // distributed" — same as the reference, whose BuildIndex holds every
-    // vector in memory anyway. When the training set is too big even
-    // sampled, fall back to one shuffle-free job per iteration
+    // Lloyd's, at most `iterations` rounds (reference :86-89 always
+    // runs 50), stopping at the fixed point (`sameBits`) with the full
+    // count's result, bit for bit. The at-scale recipe is "train on a
+    // (sampled) set that fits the driver, assign full-scan distributed"
+    // — same as the reference, whose BuildIndex holds every vector in
+    // memory anyway. When the training set is too big even sampled,
+    // fall back to one shuffle-free job per iteration
     // (per-partition bucket sums merged on the driver in partition
     // order — deterministic for a fixed partitioning, unlike a
     // treeAggregate whose merge order floats with scheduling).
@@ -343,21 +377,24 @@ object IvfFlat {
     // made against the 49-times-updated centroids, while `centroids_`
     // receives one more update from that same pass. We reproduce that:
     // rows are bucketed with `assignCs`, the model ranks probes with
-    // the once-more-updated `centroids`.
+    // the once-more-updated `centroids` (equal to `assignCs` when the
+    // rounds stopped at the fixed point).
     require(iterations >= 1, "ivfflat: iterations must be >= 1")
     val n = trainData.count()
     var assignCs: Array[Array[Double]] = centroids
     if (n * dim <= driverTrainLimit) {
       val vecs = trainData.select(vecCol).collect()
         .map(_.getSeq[Double](0).toArray)
-      val (a, f) = localLloyd(vecs, centroids, lists, iterations, metric)
+      val (a, f, _) = localLloyd(vecs, centroids, lists, iterations, metric)
       assignCs = a; centroids = f
     } else {
       val vecRdd = trainData.select(vecCol).rdd
         .map(_.getSeq[Double](0).toArray)
       vecRdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val metricId = metric.id
-      for (_ <- 0 until iterations) {
+      var rounds = 0
+      var fixed = false
+      while (rounds < iterations && !fixed) {
         val c = centroids
         val parts = vecRdd.mapPartitionsWithIndex { (pid, it) =>
           val s = Array.fill(lists)(new Array[Double](dim))
@@ -382,6 +419,8 @@ object IvfFlat {
         }
         assignCs = c
         centroids = recompute(sums, counts, lists, dim)
+        rounds += 1
+        fixed = sameBits(centroids, c)
       }
       vecRdd.unpersist()
     }

@@ -10,10 +10,11 @@ import org.apache.spark.sql.graft.NearestCentroid
   * 64× working-set cut for the candidate-generation scan).
   *
   * Train: split the dimension into M subspaces; per subspace run the
-  * same seeded fixed-iteration k-means the IVFFlat build uses (first-K
-  * seed, deterministic) over a driver-held sample — codebooks are
-  * M × K × (dim/M) doubles, tiny. Encode: one distributed pass mapping
-  * each vector to M one-byte codes.
+  * same seeded k-means the IVFFlat build uses (first-K seed, capped
+  * rounds that stop at the fixed point, deterministic) over a
+  * driver-held sample — codebooks are M × K × (dim/M) doubles, tiny.
+  * Encode: one distributed pass mapping each vector to M one-byte
+  * codes.
   *
   * Serve (asymmetric distance, ADC): per query build the M × K table
   * of exact sub-distances query-vs-codeword on the driver, broadcast
@@ -138,8 +139,9 @@ final case class PqModel(
 
 object Pq {
 
-  /** Seeded subspace k-means, reference-style: first-K seed, fixed
-    * iterations, empty cluster -> zero codeword — literally
+  /** Seeded subspace k-means, reference-style: first-K seed, at most
+    * `iterations` rounds (stopping early at the fixed point, which
+    * changes no codeword), empty cluster -> zero codeword — literally
     * `IvfFlat.localLloyd`, per subspace, trained on a deterministic
     * UNIFORM sample (seeded Bernoulli — a positional take() would
     * train on whatever the first partitions hold). */

@@ -580,6 +580,51 @@ class EngineSpec extends SparkSpecBase {
     }
   }
 
+  test("CREATE INDEX on a filled table runs the build and no upkeep collect") {
+    import graft.index.VectorIndexes
+    import org.apache.spark.graft.JobCounter
+    val e = mkEngine
+    e.executeSql("CREATE TABLE cj(v VECTOR(2), tag integer)")
+    e.executeSql("INSERT INTO cj VALUES " + (0 until 30).map(i =>
+      s"(ARRAY [${i * 7 % 30 / 10.0}, ${i * 11 % 30 / 10.0}], $i)")
+      .mkString(", "))
+    def jobs(body: => Unit): Int = JobCounter.jobsOf(spark.sparkContext)(body)._2
+    val live = e.table("cj")
+    try {
+      // the statement's jobs == its emptiness check + the same build
+      // run directly on the live table: the sync after a fresh build
+      // collects no rows above the index's max id
+      val ivf = jobs(e.executeSql("CREATE INDEX cji ON cj USING ivfflat " +
+        "(v vector_l2_ops) WITH (lists = 4, probe_lists = 2)"))
+      val ivfDirect = jobs {
+        live.isEmpty
+        VectorIndexes.createIvfFlat("cj_direct", "cj", live, Engine.RowId,
+          "v", 4, 2)
+      }
+      assert(ivf == ivfDirect, s"ivfflat: $ivf jobs, build $ivfDirect")
+      val hnsw = jobs(e.executeSql("CREATE INDEX cjh ON cj USING hnsw " +
+        "(v vector_l2_ops) WITH (m = 4, ef_construction = 16, ef_search = 64)"))
+      val hnswDirect = jobs {
+        live.isEmpty
+        VectorIndexes.createHnsw("cj_direct", "cj", live, Engine.RowId,
+          "v", 4, 16, 64)
+      }
+      assert(hnsw == hnswDirect, s"hnsw: $hnsw jobs, build $hnswDirect")
+      // and the next INSERT still reaches both (ef_search above the
+      // row count: the HNSW walk ranks every row)
+      e.executeSql("INSERT INTO cj VALUES (ARRAY [1.1, 1.7], 30)")
+      Seq("ivfflat", "hnsw").foreach { m =>
+        e.executeSql(s"set vector_index_method=$m")
+        val top = e.executeSql(
+          "SELECT tag FROM cj ORDER BY v <-> ARRAY [1.1, 1.7] LIMIT 1")
+        assert(top.collect().map(_.getInt(0)).toSeq == Seq(30), m)
+      }
+    } finally {
+      e.executeSql("set vector_index_method=")
+      Seq("cji", "cjh", "cj_direct").foreach(VectorIndexes.drop)
+    }
+  }
+
   test("TIMESTAMP columns: literal insert, comparison, ordering") {
     // the reference accepts TIMESTAMP at CREATE but its binder never
     // parses a timestamp literal (src/type/timestamp_type.cpp holds

@@ -216,7 +216,9 @@ class IndexSpec extends SparkSpecBase {
   }
 
   test("distributed k-means path (treeAggregate) is exact too") {
-    // force the distributed Lloyd's iterations (driverTrainLimit=0)
+    // force the distributed Lloyd's rounds (driverTrainLimit=0): one
+    // job per round, per-partition sums merged in partition order,
+    // stopping at the fixed point (not the treeAggregate of the name)
     val m = IvfFlat.build(emb, Seq("vec_id"), "v", lists = 8,
       probeLists = 8, driverTrainLimit = 0L)
     val got = m.scan(query, 15, Some("vec_id"))
