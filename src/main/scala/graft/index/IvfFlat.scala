@@ -249,19 +249,6 @@ object IvfFlat {
   private[index] def nonEmptyBuckets(buckets: DataFrame): Seq[Int] =
     buckets.select("__bucket").distinct().collect().map(_.getInt(0)).toSeq
 
-  private def nearest(v: Array[Double], cs: Array[Array[Double]],
-      metricId: Int): Int = {
-    var best = 0
-    var bestD = NearestCentroid.distance(v, cs(0), metricId)
-    var i = 1
-    while (i < cs.length) {
-      val d = NearestCentroid.distance(v, cs(i), metricId)
-      if (d < bestD) { best = i; bestD = d }
-      i += 1
-    }
-    best
-  }
-
   private def recompute(sums: Array[Array[Double]], counts: Array[Long],
       lists: Int, dim: Int): Array[Array[Double]] =
     Array.tabulate(lists) { b =>
@@ -306,10 +293,23 @@ object IvfFlat {
       init: Array[Array[Double]], lists: Int, iterations: Int,
       metric: DistanceMetric.Value)
       : (Array[Array[Double]], Array[Array[Double]], Int) = {
+    val (assignCs, cs, rounds, _) =
+      lloyd(vecs, init, lists, iterations, metric)
+    (assignCs, cs, rounds)
+  }
+
+  /** [[localLloyd]], plus the last round's bucket of each vector — the
+    * nearest of the last-assignment centroids, the bucket the model's
+    * layout gives its row. */
+  private def lloyd(vecs: Array[Array[Double]],
+      init: Array[Array[Double]], lists: Int, iterations: Int,
+      metric: DistanceMetric.Value)
+      : (Array[Array[Double]], Array[Array[Double]], Int, Array[Int]) = {
     var cs = init
     var assignCs = init
     val dim = init(0).length
     val metricId = metric.id
+    val buckets = new Array[Int](vecs.length)
     var rounds = 0
     var fixed = false
     while (rounds < iterations && !fixed) {
@@ -318,7 +318,8 @@ object IvfFlat {
       var j = 0
       while (j < vecs.length) {
         val v = vecs(j)
-        val b = nearest(v, cs, metricId)
+        val b = NearestCentroid.nearest(v, cs, metricId)
+        buckets(j) = b
         val s = sums(b); var p = 0
         while (p < dim) { s(p) += v(p); p += 1 }
         counts(b) += 1
@@ -329,7 +330,7 @@ object IvfFlat {
       rounds += 1
       fixed = sameBits(cs, assignCs)
     }
-    (assignCs, cs, rounds)
+    (assignCs, cs, rounds, buckets)
   }
 
   /** Build per the reference recipe. `df` must contain `idCols` and
@@ -343,30 +344,46 @@ object IvfFlat {
       metric: DistanceMetric.Value = DistanceMetric.L2,
       iterations: Int = 50,
       sampleFraction: Double = 1.0,
-      driverTrainLimit: Long = IvfFlat.driverTrainLimit): IvfFlatModel = {
+      driverTrainLimit: Long = IvfFlat.driverTrainLimit): IvfFlatModel =
+    train(df, idCols, vecCol, lists, probeLists, metric, iterations,
+      sampleFraction, driverTrainLimit)._1
 
+  /** [[build]], plus the model's posting lists over `idCols.head` when
+    * the build already holds them: training covered every row
+    * (`sampleFraction >= 1`) on the driver, so the last Lloyd round's
+    * assignment is each row's bucket in the model's layout. */
+  private[index] def train(
+      df: DataFrame,
+      idCols: Seq[String],
+      vecCol: String,
+      lists: Int,
+      probeLists: Int,
+      metric: DistanceMetric.Value = DistanceMetric.L2,
+      iterations: Int = 50,
+      sampleFraction: Double = 1.0,
+      driverTrainLimit: Long = IvfFlat.driverTrainLimit)
+      : (IvfFlatModel, Option[VectorIndexes.PostingLists]) = {
+    import df.sparkSession.implicits._
+    require(iterations >= 1, "ivfflat: iterations must be >= 1")
     val data = df.select((idCols :+ vecCol).map(col): _*)
       .withColumn(vecCol, col(vecCol).cast("array<double>"))
       .filter(col(vecCol).isNotNull) // null vectors are unindexable
     val trainData =
       if (sampleFraction >= 1.0) data
       else data.sample(withReplacement = false, sampleFraction, seed = 42)
-    trainData.cache()
+    val (n, maxDim) = Hnsw.corpusShape(trainData, vecCol)
+    require(n > 0, "ivfflat: empty input")
 
     // Seed: first `lists` vectors in input order (reference :82-84).
-    var centroids: Array[Array[Double]] = trainData
-      .orderBy(col(idCols.head).asc).limit(lists)
-      .select(vecCol).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(centroids.nonEmpty, "ivfflat: empty input")
-    val dim = centroids(0).length
-
     // Lloyd's, at most `iterations` rounds (reference :86-89 always
     // runs 50), stopping at the fixed point (`sameBits`) with the full
     // count's result, bit for bit. The at-scale recipe is "train on a
     // (sampled) set that fits the driver, assign full-scan distributed"
     // — same as the reference, whose BuildIndex holds every vector in
-    // memory anyway. When the training set is too big even sampled,
+    // memory anyway. The driver path collects (id, vector) once,
+    // unboxed, and takes as seeds the first `lists` in id order (a
+    // stable sort on the driver, nulls first as `orderBy` puts them).
+    // When the training set is too big even sampled,
     // fall back to one shuffle-free job per iteration
     // (per-partition bucket sums merged on the driver in partition
     // order — deterministic for a fixed partitioning, unlike a
@@ -379,57 +396,74 @@ object IvfFlat {
     // rows are bucketed with `assignCs`, the model ranks probes with
     // the once-more-updated `centroids` (equal to `assignCs` when the
     // rounds stopped at the fixed point).
-    require(iterations >= 1, "ivfflat: iterations must be >= 1")
-    val n = trainData.count()
-    var assignCs: Array[Array[Double]] = centroids
-    if (n * dim <= driverTrainLimit) {
-      val vecs = trainData.select(vecCol).collect()
-        .map(_.getSeq[Double](0).toArray)
-      val (a, f, _) = localLloyd(vecs, centroids, lists, iterations, metric)
-      assignCs = a; centroids = f
-    } else {
-      val vecRdd = trainData.select(vecCol).rdd
-        .map(_.getSeq[Double](0).toArray)
-      vecRdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val metricId = metric.id
-      var rounds = 0
-      var fixed = false
-      while (rounds < iterations && !fixed) {
-        val c = centroids
-        val parts = vecRdd.mapPartitionsWithIndex { (pid, it) =>
-          val s = Array.fill(lists)(new Array[Double](dim))
-          val cnt = new Array[Long](lists)
-          it.foreach { v =>
-            val b = nearest(v, c, metricId)
-            val sb = s(b); var p = 0
-            while (p < dim) { sb(p) += v(p); p += 1 }
-            cnt(b) += 1
+    val (assignCs, centroids, listed) =
+      if (n * maxDim <= driverTrainLimit) {
+        // rounds sum in collect (partition) order; seeds and posting
+        // lists follow id order
+        val rows = trainData.select(col(idCols.head).cast("long"), col(vecCol))
+          .as[(Option[Long], Array[Double])].collect()
+        val vecs = rows.map(_._2)
+        val byId = rows.indices.sortBy(rows(_)._1).toArray
+        val (a, f, _, buckets) =
+          lloyd(vecs, byId.take(lists).map(vecs), lists, iterations, metric)
+        val posting =
+          if (sampleFraction < 1.0) None
+          else {
+            val at = byId.filter(rows(_)._1.isDefined)
+            Some(VectorIndexes.PostingLists(at.map(rows(_)._1.get),
+              at.map(buckets)))
           }
-          Iterator.single((pid, s, cnt))
-        }.collect().sortBy(_._1) // merge in partition order: deterministic
-        val sums = Array.fill(lists)(new Array[Double](dim))
-        val counts = new Array[Long](lists)
-        parts.foreach { case (_, s, cnt) =>
-          var b = 0
-          while (b < lists) {
-            val x = sums(b); val y = s(b); var p = 0
-            while (p < dim) { x(p) += y(p); p += 1 }
-            counts(b) += cnt(b); b += 1
+        (a, f, posting)
+      } else {
+        trainData.cache()
+        var centroids: Array[Array[Double]] = trainData
+          .orderBy(col(idCols.head).asc).limit(lists)
+          .select(vecCol).as[Array[Double]].collect()
+        var assignCs = centroids
+        val dim = centroids(0).length
+        val vecRdd = trainData.select(vecCol).rdd
+          .map(_.getSeq[Double](0).toArray)
+        vecRdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val metricId = metric.id
+        var rounds = 0
+        var fixed = false
+        while (rounds < iterations && !fixed) {
+          val c = centroids
+          val parts = vecRdd.mapPartitionsWithIndex { (pid, it) =>
+            val s = Array.fill(lists)(new Array[Double](dim))
+            val cnt = new Array[Long](lists)
+            it.foreach { v =>
+              val b = NearestCentroid.nearest(v, c, metricId)
+              val sb = s(b); var p = 0
+              while (p < dim) { sb(p) += v(p); p += 1 }
+              cnt(b) += 1
+            }
+            Iterator.single((pid, s, cnt))
+          }.collect().sortBy(_._1) // merge in partition order: deterministic
+          val sums = Array.fill(lists)(new Array[Double](dim))
+          val counts = new Array[Long](lists)
+          parts.foreach { case (_, s, cnt) =>
+            var b = 0
+            while (b < lists) {
+              val x = sums(b); val y = s(b); var p = 0
+              while (p < dim) { x(p) += y(p); p += 1 }
+              counts(b) += cnt(b); b += 1
+            }
           }
+          assignCs = c
+          centroids = recompute(sums, counts, lists, dim)
+          rounds += 1
+          fixed = sameBits(centroids, c)
         }
-        assignCs = c
-        centroids = recompute(sums, counts, lists, dim)
-        rounds += 1
-        fixed = sameBits(centroids, c)
+        vecRdd.unpersist()
+        trainData.unpersist()
+        (assignCs, centroids, None)
       }
-      vecRdd.unpersist()
-    }
 
     val buckets = data.withColumn("__bucket",
       NearestCentroid.column(col(vecCol), assignCs, metric))
       .select((Seq("__bucket") ++ idCols ++ Seq(vecCol)).map(col): _*)
-    trainData.unpersist()
-    IvfFlatModel(centroids, metric, probeLists, vecCol, buckets)
+    (IvfFlatModel(centroids, metric, probeLists, vecCol, buckets), listed)
   }
 
   /** Reopen a persisted index — fully self-contained from `/meta`.

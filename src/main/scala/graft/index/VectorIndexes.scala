@@ -98,7 +98,7 @@ object VectorIndexes {
   }
   final case class HnswModel(idx: HnswIndex, idCol: String) extends Model {
     def candidateIds(query: Array[Double], k: Int): Array[Long] =
-      idx.scanFull(query, k).map(_._1).toArray
+      idx.scanIds(query, k)
   }
 
   final case class IndexMeta(
@@ -127,9 +127,11 @@ object VectorIndexes {
   def createIvfFlat(name: String, table: String, df: DataFrame,
       idCol: String, vecCol: String, lists: Int, probeLists: Int,
       metric: DistanceMetric.Value = DistanceMetric.L2): IvfFlatModel = {
-    val m = IvfFlat.build(df, Seq(idCol), vecCol, lists, probeLists, metric)
-    register(IndexMeta(name, table, vecCol, "ivfflat", metric,
-      IvfModel.of(m, idCol), idCol, leafOf(df)))
+    val (m, trained) =
+      IvfFlat.train(df, Seq(idCol), vecCol, lists, probeLists, metric)
+    val served = trained.fold(IvfModel.of(m, idCol))(IvfModel(m, idCol)(_))
+    register(IndexMeta(name, table, vecCol, "ivfflat", metric, served, idCol,
+      leafOf(df)))
     m
   }
 

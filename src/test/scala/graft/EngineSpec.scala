@@ -683,6 +683,48 @@ class EngineSpec extends SparkSpecBase {
     } finally graft.index.VectorIndexes.drop("prti")
   }
 
+  test("an HNSW index round-trips through the registry and keeps serving") {
+    import graft.index.VectorIndexes
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-registry").toString
+    val e1 = mkEngine
+    e1.executeSql("CREATE TABLE hrt(v VECTOR(3), tag integer)")
+    e1.executeSql("INSERT INTO hrt VALUES " + (0 until 30).map(i =>
+      s"(ARRAY [${i % 5 / 2.0}, ${i * 7 % 11 / 4.0}, ${i * 3 % 7 / 3.0}], $i)")
+      .mkString(", "))
+    // ef_search above the row count: the walk ranks every row
+    e1.executeSql("CREATE INDEX hrti ON hrt USING hnsw (v vector_l2_ops) " +
+      "WITH (m = 4, ef_construction = 16, ef_search = 64)")
+    val knnSql = "SELECT tag FROM hrt ORDER BY v <-> ARRAY [1.0, 1.2, 0.9] LIMIT 4"
+    def graphSize: Int = VectorIndexes.get("hrti").map(_.model) match {
+      case Some(VectorIndexes.HnswModel(idx, _)) => idx.size
+      case other => fail(s"hrti is not an hnsw index: $other")
+    }
+    try {
+      e1.executeSql("set vector_index_method=hnsw")
+      val before = e1.executeSql(knnSql).collect().map(_.getInt(0)).toSeq
+      e1.saveIndexRegistry(root)
+      VectorIndexes.drop("hrti") // simulate process death
+      val e2 = mkEngine
+      e2.registerTable("hrt", e1.table("hrt"))
+      e2.loadIndexRegistry(root)
+      assert(graphSize == 30, "the saved graph, not a rebuild")
+      val knn = e2.executeSql(knnSql)
+      assert(knn.queryExecution.optimizedPlan.toString.contains("__graft_knn_id"))
+      assert(knn.collect().map(_.getInt(0)).toSeq == before)
+      e2.executeSql("INSERT INTO hrt VALUES (ARRAY [4.0, -1.0, 2.5], 100)")
+      assert(graphSize == 31)
+      val top = e2.executeSql(
+        "SELECT tag FROM hrt ORDER BY v <-> ARRAY [4.0, -1.0, 2.5] LIMIT 1")
+      assert(top.queryExecution.optimizedPlan.toString.contains("__graft_knn_id"))
+      assert(top.collect().map(_.getInt(0)).toSeq == Seq(100))
+    } finally {
+      spark.conf.unset("graft.vector_index_method")
+      VectorIndexes.drop("hrti")
+      Util.deleteRecursively(new java.io.File(root))
+    }
+  }
+
   test("a reloaded index is rebuilt after DELETE") {
     val root = java.nio.file.Files
       .createTempDirectory("graft-registry").toString
