@@ -40,7 +40,8 @@ import graft.index.VectorIndexes
   *    operators `<->` (l2), `<=>` (cosine), `<#>` (inner product)
   *    (expression_factory.cpp:104-112) — rewritten to function calls
   *    and served by spark.sql with our Catalyst expressions; KNN
-  *    queries go through VectorIndexScanRule when an index matches.
+  *    queries go through VectorIndexScanRule when an index matches,
+  *    and run as one VectorTopKExec over the table's cache.
   *
   * Tables live as named DataFrames (registered temp views), the Spark
   * analogue of the reference catalog's TableHeap entries. At scale a
@@ -557,30 +558,11 @@ final class Engine(val spark: SparkSession) {
         "array(" + m.group(1).split(",")
           .map(x => s"CAST(${x.trim} AS DOUBLE)").mkString(", ") + ")"))
     // distance operators, loosest first (<#> before <> would not clash)
-    out = rewriteOp(out, "<->", "l2_dist")
-    out = rewriteOp(out, "<#>", "inner_product")
-    out = rewriteOp(out, "<=>", "cosine_similarity")
+    out = Engine.rewriteOp(out, "<->", "l2_dist")
+    out = Engine.rewriteOp(out, "<#>", "inner_product")
+    out = Engine.rewriteOp(out, "<=>", "cosine_similarity")
     "\u0001(\\d+)\u0001".r.replaceAllIn(out, m =>
       Regex.quoteReplacement(lits(m.group(1).toInt)))
-  }
-
-  /** `a <op> b` → fn(a, b) for simple operands (identifier, function
-    * call, or array(...) literal, one nesting level deep — enough for
-    * the rewritten ARRAY [..] form) — covers the reference grammar,
-    * where the operands are always a column and an ARRAY literal. */
-  private def rewriteOp(sql: String, op: String, fn: String): String = {
-    val inner = """(?:[^()]|\([^()]*\))*"""
-    val operand = s"""(array\\($inner\\)|[\\w.]+\\($inner\\)|[\\w.]+)"""
-    val re = new Regex("(?i)" + operand + """\s*""" + Regex.quote(op) +
-      """\s*""" + operand)
-    var out = sql
-    var prev = ""
-    while (prev != out) { // nested/multiple occurrences
-      prev = out
-      out = re.replaceAllIn(out, m =>
-        Regex.quoteReplacement(s"$fn(${m.group(1)}, ${m.group(2)})"))
-    }
-    out
   }
 
   // ---- helpers ------------------------------------------------------------
@@ -595,10 +577,10 @@ final class Engine(val spark: SparkSession) {
     if (df.columns.contains(Engine.RowId)) df
     else df.withColumn(Engine.RowId, monotonically_increasing_id())
 
-  private def message(s: String): DataFrame = {
-    import spark.implicits._
-    Seq(s).toDF("message")
-  }
+  /** A one-row `message` frame, built from a fixed schema and converted
+    * without an encoder (every DDL and SET statement replies so). */
+  private def message(s: String): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(s)), Engine.MessageSchema)
 
   /** split on commas not inside parens or brackets (ARRAY [..]) */
   private def splitTopLevel(s: String): Seq[String] = {
@@ -621,6 +603,33 @@ object Engine {
   val InsertRowsCol = "insert_rows"
   val DeleteRowsCol = "delete_rows"
   val UpdateRowsCol = "update_rows"
+
+  private val MessageSchema = StructType(Seq(StructField("message", StringType)))
+
+  /** `a <op> b` → fn(a, b) for simple operands (identifier, function
+    * call, or array(...) literal, one nesting level deep — enough for
+    * the rewritten ARRAY [..] form) — covers the reference grammar,
+    * where the operands are always a column and an ARRAY literal.
+    * Nested and repeated occurrences are rewritten pass by pass, until
+    * none is left or a pass changes nothing. */
+  private[graft] def rewriteOp(sql: String, op: String, fn: String): String = {
+    val re = opRegex(op)
+    var out = sql
+    while (out.contains(op)) {
+      val next = re.replaceAllIn(out, m =>
+        Regex.quoteReplacement(s"$fn(${m.group(1)}, ${m.group(2)})"))
+      if (next == out) return out
+      out = next
+    }
+    out
+  }
+
+  private val opRegex: Map[String, Regex] = Seq("<->", "<#>", "<=>").map { op =>
+    val inner = """(?:[^()]|\([^()]*\))*"""
+    val operand = s"""(array\\($inner\\)|[\\w.]+\\($inner\\)|[\\w.]+)"""
+    op -> new Regex("(?i)" + operand + """\s*""" + Regex.quote(op) +
+      """\s*""" + operand)
+  }.toMap
 
   /** One record per vector index an engine manages: its table, its
     * CREATE INDEX statement, and the index as the last upkeep step left

@@ -70,11 +70,13 @@ final class HnswIndex(
       mutable.ArrayBuffer())
   private var entryPoint: Int = -1
 
-  // Epoch-stamped visited marks, reused across searchLayer calls (one
-  // int array for the graph's lifetime instead of a hash set per
-  // search). Transient: rebuilt lazily after deserialization.
-  @transient private var visitedMark: Array[Int] = null
-  @transient private var visitedEpoch: Int = 0
+  // Epoch-stamped visited marks, one set per thread that walks this
+  // graph and reused across its searchLayer calls (an int array instead
+  // of a hash set per search). Per thread because scans of one graph
+  // may run at once: Hnsw.knnJoin probes one broadcast graph from
+  // several tasks. Transient: recreated lazily after deserialization.
+  @transient private lazy val visited =
+    ThreadLocal.withInitial[Hnsw.Marks](() => new Hnsw.Marks)
 
   /** Grow `layers(layer)` so slot `v` exists, and make the vertex a
     * member of the layer (empty neighbor list) if it wasn't. */
@@ -127,14 +129,14 @@ final class HnswIndex(
     * visited, in list order, gathers them into `g` and scores them
     * against `q`; returns how many were gathered. */
   private def gather(q: Array[Double], vs: Array[Int], cnt: Int,
-      epoch: Int, g: Hnsw.Batch): Int = {
+      mark: Array[Int], epoch: Int, g: Hnsw.Batch): Int = {
     g.fit(cnt)
     var c = 0
     var j = 0
     while (j < cnt) {
       val t = vs(j)
-      if (visitedMark(t) != epoch) {
-        visitedMark(t) = epoch; g.vs(c) = t; c += 1
+      if (mark(t) != epoch) {
+        mark(t) = epoch; g.vs(c) = t; c += 1
       }
       j += 1
     }
@@ -188,14 +190,15 @@ final class HnswIndex(
     * the same pushes, in the same order, as scoring each on the way. */
   private def searchLayer(layer: Int, query: Array[Double], ef: Int,
       entries: Array[Int]): Array[Int] = {
-    if (visitedMark == null || visitedMark.length < n)
-      visitedMark = new Array[Int](ids.length)
-    visitedEpoch += 1
-    val epoch = visitedEpoch
+    val marks = visited.get
+    if (marks.mark.length < n) marks.mark = new Array[Int](ids.length)
+    marks.epoch += 1
+    val mark = marks.mark
+    val epoch = marks.epoch
     val cand = new Hnsw.DIHeap   // min-heap on distance
     val result = new Hnsw.DIHeap // max-heap: keys stored negated
     val g = new Hnsw.Batch
-    var c = gather(query, entries, entries.length, epoch, g)
+    var c = gather(query, entries, entries.length, mark, epoch, g)
     var i = 0
     while (i < c) {
       cand.push(g.ds(i), g.vs(i)); result.push(-g.ds(i), g.vs(i)); i += 1
@@ -210,7 +213,7 @@ final class HnswIndex(
       else {
         val nb = nbrsOf(layer, v)
         if (nb != null) {
-          c = gather(query, nb.a, nb.n, epoch, g)
+          c = gather(query, nb.a, nb.n, mark, epoch, g)
           var j = 0
           while (j < c) {
             val nd = g.ds(j)
@@ -464,6 +467,13 @@ object Hnsw {
       else System.arraycopy(xs, 0, a, 0, n)
     }
     private def loose: Boolean = a.length > n + (n >> 1) + 8
+  }
+
+  /** One thread's visited marks for [[HnswIndex]] walks: vertex v is
+    * visited in the current walk when `mark(v) == epoch`. */
+  private[index] final class Marks {
+    var mark: Array[Int] = Array.emptyIntArray
+    var epoch: Int = 0
   }
 
   /** searchLayer's scratch for one batch: the gathered vertices and

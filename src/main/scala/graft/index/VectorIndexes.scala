@@ -225,13 +225,17 @@ object VectorIndexes {
     }
   }
 
-  /** Attach the KNN rewrite rule to an existing session (for
-    * config-time wiring use spark.sql.extensions=
-    * org.apache.spark.sql.graft.GraftExtensions). Idempotent. */
+  /** Attach the KNN rewrite rule and the KNN top-k operator's planner
+    * strategy to an existing session (for config-time wiring use
+    * spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions).
+    * Idempotent. */
   def enableRewrite(spark: SparkSession): Unit = {
-    val rule = new org.apache.spark.sql.graft.VectorIndexScanRule(spark)
+    import org.apache.spark.sql.graft.{VectorIndexScanRule, VectorTopKStrategy}
     val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[org.apache.spark.sql.graft.VectorIndexScanRule]))
-      spark.experimental.extraOptimizations = cur :+ rule
+    if (!cur.exists(_.isInstanceOf[VectorIndexScanRule]))
+      spark.experimental.extraOptimizations = cur :+ new VectorIndexScanRule(spark)
+    val strategies = spark.experimental.extraStrategies
+    if (!strategies.contains(VectorTopKStrategy))
+      spark.experimental.extraStrategies = strategies :+ VectorTopKStrategy
   }
 }

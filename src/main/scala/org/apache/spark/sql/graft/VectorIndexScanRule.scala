@@ -20,7 +20,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, IntegralTyp
   * must rank (`Model.candidateIds`: the probed IVFFlat lists, or the
   * HNSW walk's top-k), and filter the table to them with one
   * [[KnnIdFilter]] on its id column, leaving the original Sort+Limit in
-  * place to rank the candidates with exact distances. The filter goes
+  * place to rank the candidates with exact distances (over a cached
+  * table, [[VectorTopKStrategy]] plans that ranking as one operator,
+  * the filter included). The filter goes
   * over the Sort's child when that projects the id column, else
   * directly on the table's leaf (engine tables hide `__rid` in their
   * view's Project); with neither, the rule does not rewrite. The
@@ -181,11 +183,13 @@ case class ListedBucket(child: Expression, ids: Array[Long],
 }
 
 /** `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`
-  * wiring; for an existing session use
+  * wiring (the KNN rewrite, its top-k operator and the distance
+  * functions); for an existing session use
   * `graft.index.VectorIndexes.enableRewrite(spark)`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(session => new VectorIndexScanRule(session))
+    ext.injectPlannerStrategy(_ => VectorTopKStrategy)
     ext.injectFunction(VectorDistanceApi.l2FuncDescriptor)
     ext.injectFunction(VectorDistanceApi.ipFuncDescriptor)
     ext.injectFunction(VectorDistanceApi.cosFuncDescriptor)

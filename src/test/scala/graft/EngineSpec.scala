@@ -580,6 +580,48 @@ class EngineSpec extends SparkSpecBase {
     }
   }
 
+  test("a KNN statement runs as VectorTopK: one job, one stage; EXPLAIN runs none") {
+    import graft.index.VectorIndexes
+    import org.apache.spark.graft.JobCounter
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    import org.apache.spark.sql.graft.VectorTopKExec
+    val e = mkEngine
+    e.executeSql("CREATE TABLE tk(v VECTOR(2), tag integer)")
+    e.executeSql("INSERT INTO tk VALUES " + (0 until 30).map(i =>
+      s"(ARRAY [${i * 7 % 30 / 10.0}, ${i * 11 % 30 / 10.0}], $i)")
+      .mkString(", "))
+    e.executeSql("CREATE INDEX tkh ON tk USING hnsw (v vector_l2_ops) " +
+      "WITH (m = 4, ef_construction = 16, ef_search = 16)")
+    val knn = "SELECT tag FROM tk ORDER BY v <-> ARRAY [1.1, 1.7] LIMIT 3"
+    val filtered =
+      "SELECT tag FROM tk WHERE tag % 2 = 0 ORDER BY v <-> ARRAY [1.1, 1.7] LIMIT 3"
+    try {
+      e.executeSql("set vector_index_method=hnsw")
+      Seq(knn, filtered).foreach { sql =>
+        val (df, jobs, stages) = JobCounter.jobsAndStagesOf(spark.sparkContext) {
+          val df = e.executeSql(sql)
+          df.collect()
+          df
+        }
+        assert(jobs == 1 && stages == 1, s"$sql: $jobs jobs, $stages stages")
+        val plan = df.queryExecution.executedPlan
+        assert(plan.collectFirst { case t: VectorTopKExec => t }.nonEmpty &&
+          plan.collectFirst { case t: TakeOrderedAndProjectExec => t }.isEmpty,
+          s"$sql:\n$plan")
+        val (explained, explainJobs) = JobCounter.jobsOf(spark.sparkContext)(
+          e.executeSql(s"EXPLAIN $sql").collect().map(_.getString(0)).mkString("\n"))
+        assert(explainJobs == 0, s"EXPLAIN $sql: $explainJobs jobs")
+        assert(explained.contains("VectorTopK") &&
+          !explained.contains("TakeOrderedAndProject"), explained)
+      }
+      assert(e.executeSql(knn).queryExecution.optimizedPlan.toString
+        .contains("__graft_knn_id"))
+    } finally {
+      e.executeSql("set vector_index_method=")
+      VectorIndexes.drop("tkh")
+    }
+  }
+
   test("CREATE INDEX on a filled table runs the build and no upkeep collect") {
     import graft.index.VectorIndexes
     import org.apache.spark.graft.JobCounter
