@@ -3,7 +3,7 @@ package graft
 import scala.collection.concurrent.TrieMap
 import scala.util.matching.Regex
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{CachedRows, DistanceMetric}
 import org.apache.spark.sql.types._
@@ -46,7 +46,8 @@ import graft.index.VectorIndexes
   * Tables live as named DataFrames (registered temp views), the Spark
   * analogue of the reference catalog's TableHeap entries. At scale a
   * table would be parquet-backed; `registerTable` accepts any
-  * DataFrame, so both work.
+  * DataFrame, so both work. The aggregate that materializes a table's
+  * cache also gives its size and max `__rid`, from which INSERT numbers.
   *
   * Vector indexes follow their table through one upkeep step that
   * `registerTable` runs after every swap (`syncIndexes`): per index it
@@ -72,6 +73,8 @@ final class Engine(val spark: SparkSession) {
   }
 
   private val tables = TrieMap.empty[String, DataFrame]
+  /** (row count, max `__rid` or -1) per table, from [[registerTable]] */
+  private val sizes = TrieMap.empty[String, (Long, Long)]
   /** declared VECTOR dims per (table, column) — binder enforcement */
   private val vectorDims = TrieMap.empty[(String, String), Int]
   /** this engine's vector indexes by name (see [[Engine.IndexRecord]]) */
@@ -156,9 +159,10 @@ final class Engine(val spark: SparkSession) {
     // Invariant: every stored table carries Engine.RowId, assigned ONCE
     // when rows enter the engine and never re-derived — deletes keep
     // surviving ids, updates carry them through, inserts extend past
-    // the max. (A positional id recomputed per maintenance pass would
-    // silently renumber rows if partition order ever changed, and its
-    // global row_number window funnels the table through one task.)
+    // the live max, kept in `sizes` by the aggregate below. (A positional id
+    // recomputed per maintenance pass would silently renumber rows if
+    // partition order ever changed, and its global row_number window
+    // funnels the table through one task.)
     //
     // Ordering matters for that invariant: the new cache MUST
     // materialize while the previous incarnation's cache is still
@@ -168,14 +172,16 @@ final class Engine(val spark: SparkSession) {
     // re-running every prior insert's monotonically_increasing_id and
     // potentially renumbering rows a nondeterministic INSERT...SELECT
     // source produced, invalidating index entries built from those ids.
-    // And materialize-then-SWAP keeps failure atomic: if the count
+    // And materialize-then-SWAP keeps failure atomic: if the aggregate
     // throws (ANSI cast error in an UPDATE expression, task failure),
     // the old entry is still registered and its cache intact — the
     // statement fails, the table doesn't disappear.
     val cached = withRowId(df).cache()
-    try cached.count() // materialize while the old cache is still live
-    catch { case e: Throwable => cached.unpersist(); throw e }
+    val size = // materialize while the old cache is still live
+      try cached.agg(count(lit(1)), coalesce(max(col(Engine.RowId)), lit(-1L))).first()
+      catch { case e: Throwable => cached.unpersist(); throw e }
     tables.put(name, cached).foreach(_.unpersist())
+    sizes.put(name, (size.getLong(0), size.getLong(1)))
     // the user-facing view hides the internal rid (SELECT * parity)
     cached.drop(Engine.RowId).createOrReplaceTempView(name)
     syncIndexes(name)
@@ -216,12 +222,12 @@ final class Engine(val spark: SparkSession) {
   private val createTableRe: Regex =
     """(?is)create\s+table\s+(\w+)\s*\((.*)\)""".r
 
+  private val vecRe = """vector\s*\(\s*(\d+)\s*\)""".r
   private def createTable(sql: String): DataFrame = sql match {
     case createTableRe(name, colsStr) =>
       val fields = splitTopLevel(colsStr).map { colDef =>
         val parts = colDef.trim.split("\\s+", 2)
         val (cname, ctype) = (parts(0), parts(1).trim.toLowerCase)
-        val vecRe = """vector\s*\(\s*(\d+)\s*\)""".r
         ctype match {
           case vecRe(dim) =>
             vectorDims.put((name, cname), dim.toInt)
@@ -336,7 +342,7 @@ final class Engine(val spark: SparkSession) {
     val rec = indexes(name)
     val live = table(rec.table)
     val built = rec.built.orElse {
-      if (live.isEmpty) None
+      if (sizes(rec.table)._1 == 0) None
       else {
         val d = parseIndexDdl(rec.ddl)
         if (d.method == "ivfflat")
@@ -384,8 +390,8 @@ final class Engine(val spark: SparkSession) {
     indexes.mapValuesInPlace((_, r) =>
       if (r.table == tbl) r.copy(built = None) else r)
 
+  private val insRe = """(?is)insert\s+into\s+(\w+)\s+(.*)""".r
   private def insert(sql: String, execute: Boolean = true): DataFrame = {
-    val insRe = """(?is)insert\s+into\s+(\w+)\s+(.*)""".r
     val insRe(tbl, rest) = sql: @unchecked
     val target = table(tbl)
     val src =
@@ -399,62 +405,49 @@ final class Engine(val spark: SparkSession) {
       target.schema.filterNot(_.name == Engine.RowId))
     require(src.schema.length == userSchema.length,
       s"column count mismatch inserting into $tbl")
-    val aligned = src.toDF(userSchema.map(_.name): _*)
-      .select(userSchema.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)): _*)
-    if (!execute) return aligned // EXPLAIN: the would-be rows, no effect
-    // the binder REJECTS type mismatches; a cast that nulls out a
-    // non-null source value is a mismatch, not data (also keeps NULLed
-    // vectors from slipping past the dim check below)
-    val badCast = src.toDF(userSchema.map(_.name): _*).select(
-      userSchema.zipWithIndex.map { case (f, i) =>
-        (col(f.name).isNotNull &&
-          col(f.name).cast(f.dataType).isNull).as(s"b$i") }.toIndexedSeq: _*)
-      .filter(Seq.tabulate(userSchema.length)(i => col(s"b$i"))
-        .reduce(_ || _))
-    require(badCast.isEmpty,
-      s"type mismatch inserting into $tbl (value does not cast)")
-    vectorDims.foreach { case ((t, c), dim) =>
-      if (t == tbl) {
-        val bad = aligned.filter(col(c).isNotNull && size(col(c)) =!= dim)
-        require(bad.isEmpty, s"vector dim mismatch for $t.$c (want $dim)")
-      }
-    }
-    // assign ids ONCE, past the current max (deletes never shrink the
-    // id space back: a freed max id may be reused only after the
-    // delete's index rebuild, so no index ever sees a stale id)
-    val maxId = target.agg(coalesce(max(col(Engine.RowId)), lit(-1L)))
-      .first().getLong(0)
-    val rows = aligned
-      .withColumn(Engine.RowId, lit(maxId + 1) + monotonically_increasing_id())
+    val raw = src.toDF(userSchema.map(_.name): _*)
+    val cast = userSchema.map(f => col(f.name).cast(f.dataType).as(f.name))
+    if (!execute) return raw.select(cast: _*) // EXPLAIN: the would-be rows
+    // One pass checks, numbers and caches the new rows. The binder REJECTS
+    // type mismatches: a cast that nulls a non-null source value is one (no
+    // NULLed vector slips past the dim rule). Ids are assigned ONCE, past
+    // the max (a freed max id is reused only after the delete's index
+    // rebuild, so no index ever sees a stale id).
+    val badCast = userSchema.map(f =>
+      col(f.name).isNotNull && col(f.name).cast(f.dataType).isNull).reduce(_ || _)
+    val rows = raw.select(cast :+ badCast.as(Engine.BadCast) :+
+      (lit(sizes(tbl)._2 + 1) + monotonically_increasing_id()).as(Engine.RowId): _*)
       .cache()
-    val cnt = rows.count()
-    registerTable(tbl, table(tbl).unionAll(rows)) // indexes follow
-    // registerTable materialized the table cache (with the assigned
-    // ids) while `rows`' cache was live — safe to release it now
-    rows.unpersist() // the table's own cache covers it from here
+    val cnt = try countChecked(tbl, rows, count(lit(1)), Seq(max(col(Engine.BadCast)) ->
+        s"type mismatch inserting into $tbl (value does not cast)"),
+        userSchema.map(f => f.name -> col(f.name)))
+      catch { case e: Throwable => rows.unpersist(); throw e }
+    registerTable(tbl, target.unionAll(rows.drop(Engine.BadCast))) // indexes follow
+    // registerTable cached the table (with the assigned ids) while
+    // `rows`' cache was live: the table's own cache covers them now
+    rows.unpersist()
     import spark.implicits._
     Seq(cnt).toDF(Engine.InsertRowsCol)
   }
 
+  private val delRe = """(?is)delete\s+from\s+(\w+)(?:\s+where\s+(.*))?""".r
   private def delete(sql: String, execute: Boolean = true): DataFrame = {
-    val delRe = """(?is)delete\s+from\s+(\w+)(?:\s+where\s+(.*))?""".r
     val delRe(tbl, whereOrNull) = sql: @unchecked
     val t = table(tbl)
     val cond = Option(whereOrNull).map(w => expr(rewriteExprs(w)))
       .getOrElse(lit(true))
     if (!execute) // EXPLAIN: plan only, no effect, rid hidden
       return t.filter(cond).drop(Engine.RowId)
-    val cnt = t.filter(cond).count()
+    val before = sizes(tbl)._1
     // null-evaluating predicates keep the row (3-valued DELETE)
     invalidateIndexes(tbl)
     registerTable(tbl, t.filter(coalesce(!cond, lit(true))))
     import spark.implicits._
-    Seq(cnt).toDF(Engine.DeleteRowsCol)
+    Seq(before - sizes(tbl)._1).toDF(Engine.DeleteRowsCol)
   }
 
+  private val updRe = """(?is)update\s+(\w+)\s+set\s+(.*?)(?:\s+where\s+(.*))?""".r
   private def update(sql: String, execute: Boolean): DataFrame = {
-    val updRe = """(?is)update\s+(\w+)\s+set\s+(.*?)(?:\s+where\s+(.*))?""".r
     val updRe(tbl, setStr, whereOrNull) = sql: @unchecked
     val t = table(tbl)
     val cond = Option(whereOrNull).map(w => expr(rewriteExprs(w)))
@@ -463,20 +456,12 @@ final class Engine(val spark: SparkSession) {
       val Array(k, v) = a.split("=", 2).map(_.trim)
       k -> expr(rewriteExprs(v))
     }.toMap
-    val updated = t.select(t.columns.map(c =>
-      assignments.get(c)
-        .map(e => when(cond, e).otherwise(col(c)).as(c))
-        .getOrElse(col(c))): _*)
+    val assigned = t.columns.toSeq.flatMap(c =>
+      assignments.get(c).map(e => c -> when(cond, e).otherwise(col(c))))
+    val updated = t.select(t.columns.map(c => assigned.toMap.getOrElse(c, col(c)).as(c)): _*)
     if (!execute) // EXPLAIN: plan only, no effect, rid hidden
       return updated.drop(Engine.RowId)
-    val cnt = t.filter(cond).count()
-    // binder dim rule applies to updated vector columns too
-    vectorDims.foreach { case ((tb, c), dim) =>
-      if (tb == tbl && assignments.contains(c)) {
-        val bad = updated.filter(col(c).isNotNull && size(col(c)) =!= dim)
-        require(bad.isEmpty, s"vector dim mismatch for $tb.$c (want $dim)")
-      }
-    }
+    val cnt = countChecked(tbl, t, count(when(cond, true)), Nil, assigned)
     invalidateIndexes(tbl)
     registerTable(tbl, updated)
     import spark.implicits._
@@ -506,8 +491,8 @@ final class Engine(val spark: SparkSession) {
   /** EXPLAIN (b|p|o|s) per the reference's stage options
     * (explain_statement.h): binder→analyzed, planner→sparkPlan,
     * optimizer→optimizedPlan, schema→output schema; no option = all. */
+  private val optRe = """(?is)explain\s*\(([^)]*)\)\s*(.*)""".r
   private def explain(sql: String): DataFrame = {
-    val optRe = """(?is)explain\s*\(([^)]*)\)\s*(.*)""".r
     val (opts, body) = sql match {
       case optRe(o, b) => (o.toLowerCase, b)
       case _ => ("", sql.replaceFirst("(?is)explain\\s*", ""))
@@ -577,6 +562,19 @@ final class Engine(val spark: SparkSession) {
     if (df.columns.contains(Engine.RowId)) df
     else df.withColumn(Engine.RowId, monotonically_increasing_id())
 
+  /** One aggregate over a statement's new `rows`: `counted`, then each
+    * of the caller's `checks` and the binder's dim rule on the new values
+    * of declared VECTOR columns (bind_create.cpp:90-97). The first rule
+    * some row breaks, in that order, fails the statement with its message. */
+  private def countChecked(tbl: String, rows: DataFrame, counted: Column,
+      checks: Seq[(Column, String)], values: Seq[(String, Column)]): Long = {
+    val rules = checks ++ values.flatMap { case (c, v) => vectorDims.get((tbl, c)).map(dim =>
+      max(v.isNotNull && size(v) =!= dim) -> s"vector dim mismatch for $tbl.$c (want $dim)") }
+    val r = rows.agg(counted, rules.map(_._1): _*).first()
+    rules.zipWithIndex.foreach { case ((_, msg), i) => require(r.get(i + 1) != true, msg) }
+    r.getLong(0)
+  }
+
   /** A one-row `message` frame, built from a fixed schema and converted
     * without an encoder (every DDL and SET statement replies so). */
   private def message(s: String): DataFrame =
@@ -599,6 +597,8 @@ final class Engine(val spark: SparkSession) {
 
 object Engine {
   val RowId = "__rid"
+  /** an INSERT's per-row flag: some value of the row does not cast */
+  private val BadCast = "__bad_cast"
   /** reference __bustub_internal result column names */
   val InsertRowsCol = "insert_rows"
   val DeleteRowsCol = "delete_rows"

@@ -4,7 +4,6 @@ import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.{Limit, LogicalPlan, Project, ReturnAnswer, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
@@ -110,17 +109,25 @@ case class VectorTopKExec(limit: Int, sortOrder: Seq[SortOrder],
 
 /** The work of one [[VectorTopKExec]] task and of its driver-side merge.
   * A top-level class rather than a closure: the job's function needs no
-  * closure cleaning. Predicate, projections and ordering are generated
-  * where they run (the code generator caches them per JVM). */
+  * closure cleaning. Predicate and projections are generated where they
+  * run (the code generator caches them per JVM). Each projected row leads
+  * with its sort key values, computed once, and rows are ordered on those
+  * columns alone. */
 final class VectorTopKTask(limit: Int, sortOrder: Seq[SortOrder],
     sortInput: Seq[NamedExpression], condition: Option[Expression],
     projectList: Seq[NamedExpression], scanOutput: Seq[Attribute])
     extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow])
-    with Serializable {
+    with Serializable with AliasHelper {
 
-  private val sorted = sortInput.map(_.toAttribute)
-  // Spark's own ordering for these keys: nulls and NaN placed as Sort does
-  private val ordering = new LazilyGeneratedOrdering(sortOrder, sorted)
+  // the Sort's keys, read from the scan as sortInput's aliases define them
+  private val keys = sortOrder.zipWithIndex.map { case (o, i) =>
+    Alias(trimAliases(replaceAlias(o.child, getAliasMap(sortInput))), s"key$i")() }
+  private val row = keys.map(_.toAttribute) ++ sortInput.map(_.toAttribute)
+  // Spark's ordering for these keys (nulls placed as Sort places them,
+  // doubles compared by SQLOrderingUtil.compareDoubles) over the key
+  // columns' ordinals; interpreted, so a task generates no class for it
+  private val ordering = new InterpretedOrdering(sortOrder.zip(keys).map {
+    case (o, k) => SortOrder(k.toAttribute, o.direction, o.nullOrdering, Nil) }, row)
 
   override def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] =
     topK(ctx.partitionId(), rows)
@@ -132,16 +139,17 @@ final class VectorTopKTask(limit: Int, sortOrder: Seq[SortOrder],
       p.initialize(partition)
       rows.filter(p.eval)
     }
-    val proj = UnsafeProjection.create(sortInput, scanOutput)
+    val proj = UnsafeProjection.create(keys ++ sortInput, scanOutput)
     proj.initialize(partition)
     Utils.takeOrdered(kept.map[InternalRow](proj(_).copy()), limit)(ordering)
       .toArray
   }
 
   /** The first `limit` of the partitions' survivors, given in partition
-    * order (a stable sort keeps that order among ties), projected. */
+    * order (a stable sort keeps that order among ties), with `projectList`
+    * projected from their sortInput part. */
   def merge(survivors: Iterator[InternalRow]): Array[InternalRow] = {
-    val proj = UnsafeProjection.create(projectList, sorted)
+    val proj = UnsafeProjection.create(projectList, row)
     proj.initialize(0)
     survivors.toArray.sorted(ordering).iterator.take(limit)
       .map(r => proj(r).copy()).toArray

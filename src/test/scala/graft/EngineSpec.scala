@@ -377,6 +377,42 @@ class EngineSpec extends SparkSpecBase {
     } finally graft.index.VectorIndexes.drop("dst1i")
   }
 
+  test("INSERT ... SELECT evaluates each source row once, accepted or rejected") {
+    // the reference's InsertExecutor reads its child once
+    // (insert_executor.cpp:28-52): checking, numbering and caching the
+    // new rows is one pass over the source, also when the dim rule
+    // rejects them
+    import org.apache.spark.sql.functions.udf
+    val e = mkEngine
+    val seen = spark.sparkContext.longAccumulator("insert-source-rows")
+    spark.udf.register("seen_row",
+      udf { (id: Long) => seen.add(1); id }.asNondeterministic())
+    // both columns read the counted value: the cast rule (bigint into
+    // integer) and the dim rule each need it
+    Seq("once_ok" -> "1.0", "once_bad" -> "1.0, 0.0").foreach { case (view, tail) =>
+      spark.range(0, 40, 1, 4).selectExpr("seen_row(id) AS x")
+        .selectExpr(s"array(x * 0.5, $tail) AS v", "x AS tag")
+        .createOrReplaceTempView(view)
+    }
+    def rows = e.table("once").collect()
+      .map(r => (r.getLong(2), r.getInt(1), r.getSeq[Double](0))).sortBy(_._1).toSeq
+    e.executeSql("CREATE TABLE once(v VECTOR(2), tag integer)")
+    e.executeSql("INSERT INTO once VALUES (ARRAY [9.0, 9.0], 99)")
+    val r = e.executeSql("INSERT INTO once SELECT v, tag FROM once_ok")
+    assert(r.head().getLong(0) == 40)
+    assert(seen.value == 40, s"accepted: ${seen.value} source evaluations")
+    val before = rows
+    assert(before.map(_._2).sorted == (0 until 40) :+ 99)
+    assert(before.map(_._1).distinct.length == 41)
+    seen.reset()
+    val err = intercept[IllegalArgumentException] {
+      e.executeSql("INSERT INTO once SELECT v, tag FROM once_bad")
+    }
+    assert(err.getMessage.contains("vector dim mismatch for once.v (want 2)"))
+    assert(seen.value == 40, s"rejected: ${seen.value} source evaluations")
+    assert(rows == before) // rows and __rids unchanged
+  }
+
   test("EXPLAIN of DML is side-effect free") {
     val e = mkEngine
     e.executeSql("create table ex1(a int)")
@@ -633,24 +669,18 @@ class EngineSpec extends SparkSpecBase {
     def jobs(body: => Unit): Int = JobCounter.jobsOf(spark.sparkContext)(body)._2
     val live = e.table("cj")
     try {
-      // the statement's jobs == its emptiness check + the same build
-      // run directly on the live table: the sync after a fresh build
-      // collects no rows above the index's max id
+      // the statement's jobs == the same build run directly on the
+      // live table: the table's size is known without a job, and the
+      // sync after a fresh build collects no rows above the index's max id
       val ivf = jobs(e.executeSql("CREATE INDEX cji ON cj USING ivfflat " +
         "(v vector_l2_ops) WITH (lists = 4, probe_lists = 2)"))
-      val ivfDirect = jobs {
-        live.isEmpty
-        VectorIndexes.createIvfFlat("cj_direct", "cj", live, Engine.RowId,
-          "v", 4, 2)
-      }
+      val ivfDirect = jobs(VectorIndexes.createIvfFlat("cj_direct", "cj", live,
+        Engine.RowId, "v", 4, 2))
       assert(ivf == ivfDirect, s"ivfflat: $ivf jobs, build $ivfDirect")
       val hnsw = jobs(e.executeSql("CREATE INDEX cjh ON cj USING hnsw " +
         "(v vector_l2_ops) WITH (m = 4, ef_construction = 16, ef_search = 64)"))
-      val hnswDirect = jobs {
-        live.isEmpty
-        VectorIndexes.createHnsw("cj_direct", "cj", live, Engine.RowId,
-          "v", 4, 16, 64)
-      }
+      val hnswDirect = jobs(VectorIndexes.createHnsw("cj_direct", "cj", live,
+        Engine.RowId, "v", 4, 16, 64))
       assert(hnsw == hnswDirect, s"hnsw: $hnsw jobs, build $hnswDirect")
       // and the next INSERT still reaches both (ef_search above the
       // row count: the HNSW walk ranks every row)
