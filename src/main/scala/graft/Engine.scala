@@ -5,7 +5,7 @@ import scala.util.matching.Regex
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{CachedRows, DistanceMetric}
+import org.apache.spark.sql.graft.{CachedRows, DistanceMetric, QueryVector}
 import org.apache.spark.sql.types._
 
 import graft.functions.VectorFunctions
@@ -511,10 +511,15 @@ final class Engine(val spark: SparkSession) {
 
   // ---- expression rewriting ----------------------------------------------
 
-  /** pg-isms → Spark SQL: `ARRAY [..]` → array(..) (with double
-    * literals, matching the binder's all-DECIMAL array rule,
-    * array_expression.h:27-58) and the distance operators
-    * (expression_factory.cpp:104-112). */
+  /** pg-isms → Spark SQL: `ARRAY [..]` → a double array (the binder's
+    * all-DECIMAL array rule, array_expression.h:27-58) and the distance
+    * operators (expression_factory.cpp:104-112). An ARRAY of plain
+    * numerals, as every KNN statement's query vector is, becomes one
+    * literal ([[QueryVector]]): with `array(CAST(x AS DOUBLE), ...)` a
+    * dim-64 vector was 129 expression nodes that Spark parsed, analyzed
+    * and optimized one by one on every statement. Any other ARRAY keeps
+    * that cast form, and with it today's types, values and errors. Every
+    * pattern is compiled once, in `object Engine`. */
   private[graft] def rewriteExprs(sql: String): String = {
     // Mask single-quoted literals first: every rewrite below is
     // syntax-directed and must never touch user DATA (e.g. a value
@@ -522,31 +527,24 @@ final class Engine(val spark: SparkSession) {
     // no rewrite pattern can match; SQL's '' escape tokenizes as two
     // adjacent literals and restores identically.
     val lits = scala.collection.mutable.ArrayBuffer.empty[String]
-    var out = "'[^']*'".r.replaceAllIn(sql, m => {
+    var out = Engine.QuotedRe.replaceAllIn(sql, m => {
       lits += m.matched
       "\u0001" + (lits.length - 1) + "\u0001"
     })
     // the reference's pg parser tolerates a trailing comma before FROM
     // (p3.16-sort-limit.slt:347); Spark rejects it — normalize
-    out = out.replaceAll("(?i),\\s+(?=from\\b)", " ")
+    out = Engine.TrailingCommaRe.replaceAllIn(out, " ")
     // the reference binder scopes an anonymous `(SELECT * FROM t ...)`
     // derived table under its base table's name (p3.19:115 joins on
     // `result.dst` through one); Spark needs the alias spelled out
-    out = out.replaceAll(
-      "(?is)\\(\\s*(select\\s+\\*\\s+from\\s+(\\w+)\\b[^()]*)\\)" +
-        "(\\s+(?:inner\\s+|left\\s+|right\\s+)?join\\b)",
-      "($1) $2$3")
-    // ARRAY [1.0, 2.0] -> array(CAST(1.0 AS DOUBLE), ...)
-    val arrRe = """(?i)ARRAY\s*\[([^\]]*)\]""".r
-    out = arrRe.replaceAllIn(out, m =>
-      Regex.quoteReplacement(
-        "array(" + m.group(1).split(",")
-          .map(x => s"CAST(${x.trim} AS DOUBLE)").mkString(", ") + ")"))
+    out = Engine.DerivedTableRe.replaceAllIn(out, "($1) $2$3")
+    out = Engine.ArrayRe.replaceAllIn(out, m =>
+      Regex.quoteReplacement(Engine.doubleArray(m.group(1))))
     // distance operators, loosest first (<#> before <> would not clash)
     out = Engine.rewriteOp(out, "<->", "l2_dist")
     out = Engine.rewriteOp(out, "<#>", "inner_product")
     out = Engine.rewriteOp(out, "<=>", "cosine_similarity")
-    "\u0001(\\d+)\u0001".r.replaceAllIn(out, m =>
+    Engine.PlaceholderRe.replaceAllIn(out, m =>
       Regex.quoteReplacement(lits(m.group(1).toInt)))
   }
 
@@ -606,9 +604,30 @@ object Engine {
 
   private val MessageSchema = StructType(Seq(StructField("message", StringType)))
 
+  // rewriteExprs' patterns: quoted literals, their placeholders, a
+  // trailing comma before FROM, an unaliased derived table, ARRAY [..]
+  private val QuotedRe = "'[^']*'".r
+  private val PlaceholderRe = "\u0001(\\d+)\u0001".r
+  private val TrailingCommaRe = "(?i),\\s+(?=from\\b)".r
+  private val DerivedTableRe = ("(?is)\\(\\s*(select\\s+\\*\\s+from\\s+(\\w+)\\b[^()]*)\\)" +
+    "(\\s+(?:inner\\s+|left\\s+|right\\s+)?join\\b)").r
+  private val ArrayRe = """(?i)ARRAY\s*\[([^\]]*)\]""".r
+
+  /** The elements of an `ARRAY [..]` as a double array: one
+    * [[QueryVector]] literal when every element is a plain numeral Spark
+    * accepts, else `array(CAST(x AS DOUBLE), ...)`. Elements lose their
+    * white space only: `trim` would also cut a masked string's control
+    * characters, leaving its bare index as a number. */
+  private def doubleArray(elements: String): String = {
+    val xs = elements.split(",").map(_.strip)
+    val values = xs.flatMap(QueryVector.numeral)
+    if (values.length == xs.length) QueryVector.sql(values.toSeq)
+    else xs.map(x => s"CAST($x AS DOUBLE)").mkString("array(", ", ", ")")
+  }
+
   /** `a <op> b` → fn(a, b) for simple operands (identifier, function
     * call, or array(...) literal, one nesting level deep — enough for
-    * the rewritten ARRAY [..] form) — covers the reference grammar,
+    * the rewritten ARRAY [..] forms) — covers the reference grammar,
     * where the operands are always a column and an ARRAY literal.
     * Nested and repeated occurrences are rewritten pass by pass, until
     * none is left or a pass changes nothing. */

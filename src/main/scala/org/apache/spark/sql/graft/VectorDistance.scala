@@ -3,12 +3,16 @@
  * libraries adding native Catalyst expressions. */
 package org.apache.spark.sql.graft
 
+import scala.util.Try
+
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, CreateArray, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, CreateArray, ExpectsInputTypes, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The three vector distance functions of the reference, as native
   * Catalyst expressions with whole-stage codegen.
@@ -160,6 +164,7 @@ object VectorDistanceApi {
       (exprs: Seq[Expression]) => CreateArray(
         exprs.map(Cast(_, org.apache.spark.sql.types.DoubleType))),
       "built-in")
+    reg.createOrReplaceTempFunction(QueryVector.Function, QueryVector.build, "built-in")
   }
 
   // Descriptors for SparkSessionExtensions.injectFunction.
@@ -173,4 +178,61 @@ object VectorDistanceApi {
   def l2FuncDescriptor = descriptor("l2_dist", DistanceMetric.L2)
   def ipFuncDescriptor = descriptor("inner_product", DistanceMetric.InnerProduct)
   def cosFuncDescriptor = descriptor("cosine_similarity", DistanceMetric.Cosine)
+}
+
+/** A query vector of plain numerals, `ARRAY [0.5, -1, 2e-3]`, as one
+  * `array<double>` literal. `graft.Engine.rewriteExprs` writes such an
+  * ARRAY as `__graft_vector('<d>,<d>,...')` where it would otherwise write
+  * `array(CAST(x AS DOUBLE), ...)`: Spark parses one string token instead
+  * of a cast per element, and analysis and optimization see one literal,
+  * so a statement's fixed cost does not grow with the vector's dimension.
+  * Each value is the double the cast form gives, bit for bit. */
+object QueryVector {
+  /** the SQL name of the literal's builder */
+  val Function = "__graft_vector"
+
+  /** an optional sign, digits with an optional point, an optional exponent */
+  private val Numeral = """[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?""".r
+
+  /** `CAST(<text> AS DOUBLE)` as Spark parses and evaluates it, for a plain
+    * numeral; None for any other text and for a numeral the parser rejects.
+    * The literal is the one Spark's `AstBuilder` makes of the text: with an
+    * exponent a double, range-checked against `Double.MinValue` and
+    * `Double.MaxValue` as it does; with a point a decimal; otherwise an int,
+    * a long or a decimal, the first that holds it. A decimal of more than 38
+    * digits fails there and here. A leading `+` is a unary plus, which keeps
+    * the value; a leading `-` is part of the literal. Spark's own `Cast` then
+    * converts it, so no conversion rule is restated here. */
+  def numeral(text: String): Option[Double] =
+    if (!Numeral.matches(text) || SQLConf.get.exponentLiteralAsDecimalEnabled) None
+    else Try {
+      val t = text.stripPrefix("+")
+      val lit =
+        if (t.exists(c => c == 'e' || c == 'E')) {
+          val v = BigDecimal(t)
+          require(!(v < Double.MinValue || v > Double.MaxValue), s"$t out of range")
+          Literal(t.toDouble)
+        }
+        else if (t.contains('.')) Literal(BigDecimal(t).underlying())
+        else BigDecimal(t) match {
+          case v if v.isValidInt => Literal(v.intValue)
+          case v if v.isValidLong => Literal(v.longValue)
+          case v => Literal(v.underlying())
+        }
+      Cast(lit, DoubleType).eval().asInstanceOf[Double]
+    }.toOption
+
+  /** The SQL call for `values`, each written as `java.lang.Double.toString`
+    * gives it, which `parseDouble` reads back to the same bits. */
+  def sql(values: Seq[Double]): String =
+    values.map(java.lang.Double.toString).mkString(s"$Function('", ",", "')")
+
+  /** The literal of one [[sql]] call: the value and type the cast form
+    * folds to (a non-null array of non-null doubles). */
+  def build(args: Seq[Expression]): Expression = args match {
+    case Seq(Literal(s: UTF8String, _: StringType)) =>
+      val values = s.toString.split(',').map(v => java.lang.Double.parseDouble(v): Any)
+      Literal(new GenericArrayData(values), ArrayType(DoubleType, containsNull = false))
+    case _ => throw new IllegalArgumentException(s"$Function takes one string of doubles")
+  }
 }

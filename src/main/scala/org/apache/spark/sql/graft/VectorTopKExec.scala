@@ -109,10 +109,17 @@ case class VectorTopKExec(limit: Int, sortOrder: Seq[SortOrder],
 
 /** The work of one [[VectorTopKExec]] task and of its driver-side merge.
   * A top-level class rather than a closure: the job's function needs no
-  * closure cleaning. Predicate and projections are generated where they
-  * run (the code generator caches them per JVM). Each projected row leads
-  * with its sort key values, computed once, and rows are ordered on those
-  * columns alone. */
+  * closure cleaning. Each projected row leads with its sort key values,
+  * computed once, and rows are ordered on those columns alone.
+  *
+  * Only that per-row key projection is generated code: it runs once per
+  * row, and it compiles once per query shape, since the query vector is a
+  * literal that generated code holds as a reference object. The filter
+  * and the merge's projection are interpreted. Generated code inlines
+  * scalar constants, so a filter such as `id % 10 = 3` compiled a new
+  * class for every constant it met; the merge projects at most P×k rows
+  * on the driver. With the ordering also interpreted, a statement that
+  * differs from an earlier one only in its constants compiles nothing. */
 final class VectorTopKTask(limit: Int, sortOrder: Seq[SortOrder],
     sortInput: Seq[NamedExpression], condition: Option[Expression],
     projectList: Seq[NamedExpression], scanOutput: Seq[Attribute])
@@ -135,7 +142,7 @@ final class VectorTopKTask(limit: Int, sortOrder: Seq[SortOrder],
   /** The first `limit` of one partition's filtered, projected rows. */
   def topK(partition: Int, rows: Iterator[InternalRow]): Array[InternalRow] = {
     val kept = condition.fold(rows) { c =>
-      val p = Predicate.create(c, scanOutput)
+      val p = Predicate.createInterpreted(BindReferences.bindReference(c, scanOutput))
       p.initialize(partition)
       rows.filter(p.eval)
     }
@@ -149,7 +156,8 @@ final class VectorTopKTask(limit: Int, sortOrder: Seq[SortOrder],
     * order (a stable sort keeps that order among ties), with `projectList`
     * projected from their sortInput part. */
   def merge(survivors: Iterator[InternalRow]): Array[InternalRow] = {
-    val proj = UnsafeProjection.create(projectList, row)
+    val proj = InterpretedUnsafeProjection.createProjection(
+      BindReferences.bindReferences(projectList, row))
     proj.initialize(0)
     survivors.toArray.sorted(ordering).iterator.take(limit)
       .map(r => proj(r).copy()).toArray

@@ -22,7 +22,7 @@ class BenchmarkApiSpec extends SparkSpecBase {
       "(v vector_l2_ops) WITH (m = 4, ef_construction = 8, ef_search = 8)")
     try {
       assert(e.rewriteExprs("SELECT id FROM api1 ORDER BY v <-> " +
-        "ARRAY [1.0, 0.1] LIMIT 2").contains("l2_dist(v, array("))
+        "ARRAY [1.0, 0.1] LIMIT 2").contains("l2_dist(v, __graft_vector('1.0,0.1'))"))
       val q = Array(1.0, 0.1)
       VectorIndexes.get("api1_ivf").map(_.model) match {
         case Some(VectorIndexes.IvfModel(m, _)) =>

@@ -832,4 +832,32 @@ class EngineSpec extends SparkSpecBase {
       graft.index.VectorIndexes.drop("prdi")
     }
   }
+
+  test("a KNN statement's vector is one literal; new filter constants compile no class") {
+    import org.apache.spark.graft.CompileCounter
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val dim = 64
+    def vec(f: Int => Double) = (0 until dim).map(f).mkString("ARRAY [", ", ", "]")
+    val e = mkEngine
+    e.executeSql(s"CREATE TABLE kc(v VECTOR($dim), tag integer)")
+    e.executeSql("INSERT INTO kc VALUES " + (0 until 40).map(i =>
+      s"(${vec(j => (i * 31 + j * 17) % 97 / 10.0)}, $i)").mkString(", "))
+    def knn(s: Int) = s"SELECT tag FROM kc WHERE tag % 17 = $s " +
+      s"ORDER BY v <-> ${vec(j => (s * 13 + j * 7) % 89 / 8.0 - 5)} LIMIT 3"
+    // the query vector reaches analysis as one literal, not a cast per element
+    val analyzed = e.executeSql(knn(0)).queryExecution.analyzed
+    val casts = analyzed.flatMap(_.expressions.flatMap(_.collect {
+      case c: Cast if c.child.foldable => c }))
+    val vectors = analyzed.flatMap(_.expressions.flatMap(_.collect {
+      case Literal(a: ArrayData, ArrayType(DoubleType, _)) => a.numElements() }))
+    assert(casts.isEmpty && vectors == Seq(dim), s"$casts\n$vectors\n$analyzed")
+    e.executeSql(knn(0)).collect() // warm: the statement's shape compiles here
+    val (answers, compiled) = CompileCounter.compiledBy(
+      (1 to 10).map(s => e.executeSql(knn(s)).collect().map(_.getInt(0)).toSeq))
+    assert(compiled == 0, s"$compiled classes compiled for new constants")
+    assert(answers.zip(1 to 10).forall { case (a, s) =>
+      a.nonEmpty && a.forall(_ % 17 == s) }, answers)
+  }
 }
